@@ -15,7 +15,10 @@ import graft.sources.{GraftFilters, GraftRelation}
   * Re-derivation of the reference's headline rule `PropagateJDBCLimit`
   * (reference: src/main/scala/org/apache/spark/sql/PropagateJDBCLimit.scala:14-27):
   *  - match `LocalLimit(IntegerLiteral(n), LogicalRelation(GraftRelation))`;
-  *  - swap in a limit-carrying copy of the relation;
+  *  - swap in a limit-carrying copy of the relation. The copy carries
+  *    the schema the relation resolved on the driver from one footer
+  *    when it was loaded (a constructor value, not a source option), so
+  *    the rewrite reads no footer and launches no Spark job;
   *  - preserve the original output attributes / expr-ids by copying the
   *    `LogicalRelation` rather than rebuilding it (the reference preserves
   *    `rel.attributeMap` values, PropagateJDBCLimit.scala:21) — getting

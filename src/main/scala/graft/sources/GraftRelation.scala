@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
@@ -21,6 +22,12 @@ import org.apache.spark.sql.types.StructType
   * `LIMIT n` to the per-partition JDBC SQL (reference:
   * JDBCRDDWithLimit.scala:65-71,131-133). Global limit semantics remain
   * enforced by the `LocalLimit` the rule leaves on top.
+  *
+  * The schema is resolved once, on the driver, from one parquet footer
+  * (no Spark job) when the relation is built through the companion's
+  * `apply`, and then travels as a constructor value: the rule's limit
+  * copy carries it and `buildScan` hands it to its inner read, so
+  * planning a V1 read never re-infers it.
   *
   * Scale notes (100 TB stance):
   *  - The inner scan is Spark's vectorized parquet reader, so pruning and
@@ -42,9 +49,10 @@ import org.apache.spark.sql.types.StructType
 case class GraftRelation(
     @transient sparkSession: SparkSession,
     path: String,
-    numPartitions: Int = 1,
-    partitionColumn: Option[String] = None,
-    limit: Int = -1)
+    schema: StructType,
+    numPartitions: Int,
+    partitionColumn: Option[String],
+    limit: Int)
   extends BaseRelation with PrunedFilteredScan with InsertableRelation {
 
   override def sqlContext: SQLContext = sparkSession.sqlContext
@@ -59,12 +67,6 @@ case class GraftRelation(
     else ""
     s"GraftRelation(${path.split('/').last})$parts$lim"
   }
-
-  /** Eager schema resolution from the parquet footer — the analog of the
-    * reference's `JDBCRDD.resolveTable` metadata query
-    * (JDBCRelationWithLimit.scala:26).
-    */
-  override val schema: StructType = sparkSession.read.parquet(path).schema
 
   /** The scan already emits Catalyst internal rows (`UnsafeRow` straight
     * from the inner plan's `toRdd`), so Spark must not re-convert — same
@@ -127,7 +129,9 @@ case class GraftRelation(
       }
     }
     def branch(partPred: Option[Column]): DataFrame = {
-      var df = sparkSession.read.parquet(path)
+      // the carried schema skips inference; the directory is still
+      // listed per execution, so files appended since load are read
+      var df = sparkSession.read.schema(schema).parquet(path)
       val pushed = filters.flatMap(GraftFilters.compile)
       val all = pushed ++ partPred
       if (all.nonEmpty) df = df.filter(all.reduce(_ && _))
@@ -185,6 +189,20 @@ case class GraftRelation(
 }
 
 object GraftRelation {
+  /** Eager schema resolution from one parquet footer on the driver —
+    * the analog of the reference's `JDBCRDD.resolveTable` metadata
+    * query (JDBCRelationWithLimit.scala:26). Same schema and errors as
+    * `spark.read.parquet(path).schema`, without its inference job. */
+  def apply(
+      sparkSession: SparkSession,
+      path: String,
+      numPartitions: Int = 1,
+      partitionColumn: Option[String] = None,
+      limit: Int = -1): GraftRelation =
+    GraftRelation(sparkSession, path,
+      ParquetSchemaBridge.inferSchema(sparkSession, path),
+      numPartitions, partitionColumn, limit)
+
   /** Accumulator of the most recent buildScan on this driver — test/
     * observability hook for the rows-read pushdown gate. */
   val lastRowsEmitted =

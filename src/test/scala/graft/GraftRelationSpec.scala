@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 
-import graft.sources.{GraftFilters, GraftRelation}
+import graft.sources.{GraftFilters, GraftRelation, GraftSink}
+import graft.sources.v2.{GraftDeleteV2, GraftManifest}
 
 /** Scan-surface contracts: pruning, filter pushdown, residuals,
   * partitioned read (reference JDBCRelationWithLimit.scala:29-43,
@@ -17,6 +19,82 @@ class GraftRelationSpec extends SparkTestBase {
   test("schema resolves eagerly from parquet footer") {
     assert(rel().schema.fieldNames.contains("l_orderkey"))
     assert(rel().schema.size == 11)
+  }
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-rel").toString
+
+  test("schema parity: the driver-side footer read equals spark.read.parquet") {
+    val base = tmpDir()
+    val li = spark.read.parquet(s"$sf001/lineitem.parquet")
+    li.repartition(4).write.format("graft-v2").mode("append")
+      .option("path", s"$base/v2")
+      .option("statsColumns", "l_orderkey,l_quantity").save()
+    GraftSink.saveAtomic(li.limit(100), s"$base/v1", SaveMode.ErrorIfExists)
+    spark.range(10).select(col("id"),
+        array(col("id"), col("id") + 1).as("arr"),
+        struct(col("id").as("a"), lit("x").as("b")).as("st"))
+      .write.parquet(s"$base/nested")
+    // TIMESTAMP_NTZ is only told apart from TIMESTAMP by the Spark
+    // schema kept in the footer's key-value metadata
+    spark.range(5).select(col("id"),
+        lit(java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5)).as("ts"))
+      .write.parquet(s"$base/ntz")
+    spark.range(20).select(col("id"), (col("id") % 3).as("k"))
+      .write.partitionBy("k").parquet(s"$base/hive")
+    val paths = Seq(s"$sf001/lineitem.parquet") ++
+      Seq("v2", "v1", "nested", "ntz", "hive").map(t => s"$base/$t")
+    paths.foreach { p =>
+      assert(GraftRelation(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    assert(GraftRelation(spark, s"$base/ntz").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    // the carried schema, partition column included, drives the scan
+    val hive = spark.read.format("graft").load(s"$base/hive")
+    assert(hive.schema.fieldNames.toSeq == Seq("id", "k"))
+    assert(hive.orderBy("id").collect().toSeq ==
+      spark.read.parquet(s"$base/hive").orderBy("id").collect().toSeq)
+  }
+
+  test("error parity: a missing path and an empty directory fail as " +
+      "spark.read.parquet does") {
+    def failure(f: => Any): (String, String) = {
+      val e = intercept[AnalysisException](f)
+      (e.getClass.getName, e.getCondition)
+    }
+    val missing = s"${tmpDir()}/nope"
+    assert(failure(GraftRelation(spark, missing)) ==
+      failure(spark.read.parquet(missing)))
+    assert(failure(GraftRelation(spark, missing))._2 == "PATH_NOT_FOUND")
+    val empty = tmpDir()
+    assert(failure(spark.read.format("graft").load(empty)) ==
+      failure(spark.read.parquet(empty)))
+    assert(failure(GraftRelation(spark, empty))._2 == "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("a loaded V1 DataFrame lists its directory per execution and " +
+      "refuses deletion vectors added after load") {
+    val p = s"${tmpDir()}/t"
+    GraftSink.saveAtomic(spark.range(0, 10).toDF("id"), p, SaveMode.ErrorIfExists)
+    val df = spark.read.format("graft").load(p)
+    assert(df.count() == 10)
+    GraftSink.saveAtomic(spark.range(10, 25).toDF("id"), p, SaveMode.Append)
+    assert(df.count() == 25)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 25L))
+
+    val dv = s"${tmpDir()}/dv"
+    spark.range(0, 1000).toDF("id").write.format("graft-v2").mode("append")
+      .option("path", dv).save()
+    val masked = spark.read.format("graft").load(dv)
+    assert(masked.count() == 1000)
+    GraftDeleteV2.deleteWhere(dv, masked.schema, EqualTo("id", 3L))
+    val dir = new org.apache.hadoop.fs.Path(dv)
+    assert(GraftManifest.current(dir.getFileSystem(
+      spark.sessionState.newHadoopConf()), dir).exists(_.dvs.nonEmpty))
+    val e = intercept[Exception](masked.count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains("carries deletion vectors")), messages)
   }
 
   // needConversion=false: the scan emits InternalRow typed as Row

@@ -94,6 +94,55 @@ class LimitPushdownSpec extends SparkTestBase {
       s"limit 5 should cap source emission, emitted $limEmitted")
   }
 
+  test("planning a pushed V1 limit starts no Spark job") {
+    val sc = spark.sparkContext
+    val group = "graft-zero-jobs-guard"
+    val planned = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    // listener events arrive in order: once the fence job's start is
+    // seen, every job planning started has been counted
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "fence")
+            fenced.countDown()
+          else planned.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "plan")
+    try {
+      val df = spark.read.format("graft").load(s"$sf001/lineitem.parquet")
+        .select(col("l_orderkey"), col("l_quantity")).limit(4)
+      df.queryExecution.optimizedPlan
+      val physical = df.queryExecution.executedPlan
+      sc.setJobDescription("fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(planned.get == 0, s"planning started ${planned.get} job(s)")
+
+      assert(relationsOf(df).map(_.limit) == Seq(4))
+      assert(df.queryExecution.optimizedPlan.toString.contains("[limit=4]"))
+      sc.setJobDescription(null)
+      assert(df.collect().length == 4)
+      val parts = (physical match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }).collect {
+        case s: org.apache.spark.sql.execution.RowDataSourceScanExec =>
+          s.rdd.getNumPartitions
+      }.sum
+      val emitted = GraftRelation.lastRowsEmitted.get.value
+      assert(emitted <= 4L * parts, s"emitted $emitted over $parts partitions")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("limit 0 yields empty result") {
     val df = Tables.graftScan(spark, sf001, "lineitem").limit(0)
     assert(df.count() == 0)
