@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness: runs every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR`, forcing full materialization through the noop
   * sink (a bare `count()` would let Catalyst prune projections, windows
@@ -76,35 +74,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // one warm-up action so JVM/codegen startup isn't billed to the
     // first query
     spark.read.parquet(s"$sfDir/nation.parquet").count()
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_PREFIT")) {
-    // pre-train the IVF quantizer: the operator's contract is train-once
-    // / apply-many (Ann.IvfModel), so steady-state query cost — what the
-    // bench measures everywhere else — excludes the one-time fit
-    operators.Ann.trainIvfCached(s"$sfDir/embeddings#16",
-      Tables.t(spark, sfDir, "embeddings"))
-    // same train-once contract for the quality classifier: SparkEntry
-    // memoizes by key, so this fit is the one q_quality_model applies
-    SparkEntry.prefitQualityModel(spark, sfDir)
-    // and for the BPE tokenizer (train-once / encode-many)
-    operators.Bpe.trainCached(s"$sfDir/documents#bpe12",
-      Tables.t(spark, sfDir, "documents"), 12)
-    // and the unigram-LM tokenizer (same contract)
-    operators.Unigram.trainCached(s"$sfDir/documents#uni16",
-      Tables.t(spark, sfDir, "documents"), 16)
-    }
+    // pre-fit the shared models: the operators' contract is train-once
+    // / apply-many, so steady-state query cost — what the bench
+    // measures everywhere else — excludes the one-time fits
+    if (!sys.env.contains("SPARK_GRAFT_SKIP_PREFIT"))
+      SparkEntry.prefitModels(spark, sfDir)
     // min of `runs` executions per query: a single serial pass bills
     // whichever queries run last for the accumulated JIT/GC state (the
     // sandbox is ±30% noisy, and one stall smeared a 4-6x phantom
@@ -112,8 +90,8 @@ object Bench {
     // is the steady-state plan cost — what a warm cluster pays.
     // Default 3 since round 7: the round-6 q_scan_v2 "regression"
     // (1.35 s vs 0.43 s in the same round's SCALE_PROBE) was a stall
-    // that hit BOTH of min-of-2's runs — ProfQ then measured the same
-    // query at 0.34-0.45 s over six consecutive executions. Three
+    // that hit BOTH of min-of-2's runs — isolated runs then measured
+    // the same query at 0.34-0.45 s over six executions. Three
     // runs make a double-stall phantom an order rarer.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map {
@@ -172,13 +150,11 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val sub = subset.map(_ => ",\"subset\":true").getOrElse("")
-    // three-tier rates: pure-plan operators vs full lifecycle cycles
-    // vs real model fits. The fit tier is NEW in round 20 (its five
-    // queries now time an actual fit — see the evict above) and is
-    // reported in ADDITION to the operator tier, whose membership is
-    // unchanged for round-over-round comparability.
-    val (lifeQ, opQ) = results.partition(r => LifecycleQueries(r._1))
-    val fitQ = results.filter(r => SparkEntry.FitQueries(r._1))
+    // three-tier rates, a partition of the queries: real model fits
+    // (their memo is evicted above), full lifecycle cycles, and the
+    // pure-plan operators that remain
+    val (fitQ, rest) = results.partition(r => SparkEntry.FitQueries(r._1))
+    val (lifeQ, opQ) = rest.partition(r => LifecycleQueries(r._1))
     def rate(rs: Seq[(String, Double)]): String = {
       val n = rs.size
       val s = rs.map(_._2).sum

@@ -190,15 +190,10 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is TIMESTAMP(NANOS): read as long for the verbatim
-      // copy (Tables.t converts to micros downstream either way)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // events.ts is TIMESTAMP(NANOS): read as long for the verbatim
+    // copy (Tables.t converts to micros downstream either way)
+    val spark =
+      LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val scaled = Files.createTempDirectory("graft-scale").toString
     inflate(spark, base, scaled, factor)
@@ -211,14 +206,9 @@ object ScaleProbe {
     }
     // warm each dir's file cache / codegen once
     spark.read.parquet(s"$scaled/lineitem.parquet").count()
-    // steady-state model contract (same as Bench): the one-time quality
-    // fit happens outside the timed runs, for BOTH dirs
-    Seq(base, scaled).foreach(SparkEntry.prefitQualityModel(spark, _))
-    // same train-once contract for the BPE tokenizer (q_bpe_encode)
-    Seq(base, scaled).foreach { d =>
-      operators.Bpe.trainCached(s"$d/documents#bpe12",
-        Tables.t(spark, d, "documents"), 12)
-    }
+    // steady-state model contract (same as Bench): the one-time fits
+    // happen outside the timed runs, for BOTH dirs
+    Seq(base, scaled).foreach(SparkEntry.prefitModels(spark, _))
 
     // SPARK_GRAFT_PROBE_QUERIES=a,b probes a subset (iterating on one
     // operator's ratio without paying the full ~1 h sweep)

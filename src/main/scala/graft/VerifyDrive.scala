@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object VerifyDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark =
+      LocalSession("spark.sql.extensions" -> "graft.GraftExtensions")
     // user flow: read through the graft source, limit, show
     val df = spark.read.format("graft")
       .option("path", "/root/testdata/sf0.001/lineitem.parquet").load()

@@ -842,6 +842,16 @@ case class DsirScoreSum(child: Expression, dim: Int,
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)
   override def prettyName: String = "dsir_score_sum"
+  // the ratios compare by content (an Array's == is identity), so two
+  // scorers over one model are equal and CSE can reuse one of them
+  override def equals(o: Any): Boolean = o match {
+    case d: DsirScoreSum => child == d.child && dim == d.dim &&
+      java.util.Arrays.equals(ratiosMicro, d.ratiosMicro)
+    case _ => false
+  }
+  private lazy val contentHash =
+    (child, dim, java.util.Arrays.hashCode(ratiosMicro)).##
+  override def hashCode(): Int = contentHash
 }
 
 /** `levenshtein(l, r) <= 1` as ONE early-exit code-point walk — the

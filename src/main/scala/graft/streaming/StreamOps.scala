@@ -401,7 +401,7 @@ object StreamOps {
         org.apache.spark.unsafe.types.UTF8String.fromString(every))
     val slackMs = windowMs.days * 86400000L +
       windowMs.microseconds / 1000L
-    // r20 (ProbeTrend: the ingest batch was ~2 s of the lifecycle):
+    // r20 (measured: the ingest batch was ~2 s of the lifecycle):
     // pre-fold occurrences into (wstart, term, cnt) groups INSIDE each
     // scan partition (stateless — legal where a second stateful
     // aggregation would not be), so the shuffle into the stateful
@@ -464,25 +464,13 @@ object StreamOps {
     // the summary is BOUNDED by the operator's own contract
     // (≤ counters rows per closed window): pull it local once — no
     // cached frames to leak across a long-lived stream
-    val summary = phase("summary_collect") { batch
+    val summary = batch
       .select(col("wstart"), col("term"), col("total"))
-      .collect() }
+      .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
     exactTrendingFromSummary(batch.sparkSession, summary, corpusPath,
       k, counters, every, tsCol, textCol)
   }
-
-  /** Dev phase timer (`SPARK_GRAFT_TREND_PHASES=1`): where a finalize
-    * batch's time goes — stderr only, no behavior change. */
-  private def phase[T](label: String)(f: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_TREND_PHASES")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"TRENDPHASE $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
 
   /** [[exactTrendingBatch]] after the summary collect — the refinement
     * body, shared with [[tailTrendingExact]]'s foreachBatch (which
@@ -505,7 +493,7 @@ object StreamOps {
           .as("term"))
       .join(broadcast(winTotals.keys.toSeq.toDF("wstart")),
         Seq("wstart"))
-    // r20 (ProbeTrend: the finalize batch burned 5.6 s, ~2 corpus
+    // r20 (measured: the finalize batch burned 5.6 s, ~2 corpus
     // passes): the candidate-pruned rollup and the fallback rollup
     // each re-tokenized the ENTIRE corpus slice — and the fallback arm
     // executed even when every window proved. The per-(window, term)
@@ -529,9 +517,9 @@ object StreamOps {
           .orderBy(col("n").desc, col("term"))))
       .filter(col("rk") <= k)
     // candidate-pruned exact top-k: ≤ k rows per window come back
-    val prunedTopK = phase("pruned_topk") { rank(
+    val prunedTopK = rank(
       rollup.join(broadcast(cands), Seq("wstart", "term")))
-      .collect() }
+      .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getInt(3)))
     // a window's candidate path is PROVEN when it filled k ranks and
@@ -546,10 +534,6 @@ object StreamOps {
       .toSeq.toDF("wstart", "term", "n", "rk")
       .withColumn("pruned", lit(true))
     val badWins = winTotals.keys.filterNot(proven.contains).toSeq
-    if (sys.env.contains("SPARK_GRAFT_TREND_PHASES"))
-      System.err.println(s"TRENDPHASE windows=${winTotals.size} " +
-        s"proven=${proven.size} fallback=${badWins.size} " +
-        s"cands=${summary.length}")
     if (badWins.isEmpty) {
       // nothing fell back: skip the fallback subtree outright instead
       // of planning a rollup scan that returns zero rows
@@ -592,9 +576,9 @@ object StreamOps {
         // summary collect doubles as the emptiness check (the old
         // isEmpty pre-check re-ran the whole stateful plan — ~0.4 s a
         // batch of pure re-execution in the phase profile)
-        val summary = phase("summary_collect") { batch
+        val summary = batch
           .select(col("wstart"), col("term"), col("total"))
-          .collect() }
+          .collect()
           .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
         if (summary.nonEmpty) {
           // the refinement's rollup barrier is batch-scoped: sweep the
@@ -602,10 +586,10 @@ object StreamOps {
           // feed never accumulates checkpoint storage across batches
           val sc = batch.sparkSession.sparkContext
           val persistedBefore = sc.getPersistentRDDs.keySet
-          phase("refine_commit")(commitStreamBatch(
+          commitStreamBatch(
             exactTrendingFromSummary(batch.sparkSession, summary,
               corpusPath, k, counters, every, tsCol, textCol),
-            outPath, "trending-exact", id))
+            outPath, "trending-exact", id)
           (sc.getPersistentRDDs.keySet -- persistedBefore).foreach {
             rid => sc.getPersistentRDDs.get(rid)
               .foreach(_.unpersist(blocking = false))
@@ -1006,8 +990,8 @@ object StreamOps {
     * precedent, disclosed: past the cap the entity is bot traffic
     * and later-timestamped pending events drop). A bot replaying
     * step events for a year against an open window costs `steps`
-    * longs, not a year of buffer — StreamBench's
-    * `funnel_feed_state` probe pins the flat bytes.
+    * longs, not a year of buffer — state bytes measured bit-identical
+    * at 1× and 4× stalled history (SCALE_PROBE.md).
     * (Events beyond the window drop on fold: they can never qualify
     * for ANY candidate t1, which only decreases; entities with no
     * step-1 yet keep only events the watermark still allows a future

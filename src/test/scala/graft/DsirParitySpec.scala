@@ -51,4 +51,18 @@ class DsirParitySpec extends SparkTestBase {
       assert(a === b, s"diverged: native $a vs fold $b")
     }
   }
+
+  test("DsirScoreSum compares its ratios by content: equal instances " +
+      "are ==, hash alike and are semanticEquals") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.functions.DsirScoreSum
+    val gs = AttributeReference("_gs", ArrayType(StringType))()
+    val a = DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L))
+    val b = DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L))
+    assert(a == b)
+    assert(a.hashCode == b.hashCode)
+    assert(a.semanticEquals(b))
+    assert(a != DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 1L)))
+  }
 }

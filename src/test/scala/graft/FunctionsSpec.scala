@@ -208,4 +208,43 @@ class FunctionsSpec extends SparkTestBase {
     assert(got.isEmpty,
       s"diverged on ${got.take(5).mkString(", ")} (${got.length} pairs)")
   }
+
+  test("codegen-only evaluation: the native expressions compile with " +
+      "no interpreted fallback and keep their self-similarity invariants") {
+    import graft.operators.Ann
+    val conf = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val docs = Tables.t(spark, sf001, "documents")
+      val texts = docs.select(
+        simhash($"text").as("sh"),
+        fingerprint($"text", 16).as("fp"),
+        minhash($"text", 16, 3).as("mh"),
+        lang_guess($"text").as("lg"),
+        ngram_jaccard($"text", $"text", 3).as("nj")).collect()
+      assert(texts.nonEmpty && texts.length == docs.count())
+      val notOne = texts.filterNot(r => r.isNullAt(4) || r.getDouble(4) == 1.0)
+      assert(notOne.isEmpty, s"self ngram_jaccard != 1: ${notOne.take(3)
+        .mkString(", ")}")
+
+      val emb = Tables.t(spark, sf001, "embeddings")
+      val hp = Ann.hyperplanes(6, 64, 42L)
+      val vecs = emb.select(
+        Ann.signBucket($"embedding", hp).as("b"),
+        cosine_sim($"embedding", $"embedding").as("c")).collect()
+      assert(vecs.nonEmpty)
+      assert(vecs.forall(r => r.getInt(0) >= 0 && r.getInt(0) < 64))
+      val offOne = vecs.filter(r => math.abs(r.getDouble(1) - 1.0) > 1e-9)
+      assert(offOne.isEmpty, s"self cosine off 1: ${offOne.take(3)
+        .mkString(", ")}")
+
+      val model = Ann.trainIvf(emb, nlist = 8)
+      val cells = emb.select(Ann.nearestCells($"embedding", model, 2))
+        .as[Seq[Int]].collect()
+      assert(cells.length == vecs.length)
+      assert(cells.forall(c => c.size == 2 && c.distinct.size == 2 &&
+        c.forall(i => i >= 0 && i < model.centers.length)))
+    } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+  }
 }

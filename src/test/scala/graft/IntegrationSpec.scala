@@ -32,6 +32,15 @@ class IntegrationSpec extends SparkTestBase {
       s"dataDependent names not in queries: ${dataDependent -- qs}")
     val got = qs -- oracled -- dataDependent
     assert(got.isEmpty, s"queries without oracle: $got")
+    // the harnesses' name-keyed lists may only name real queries
+    Seq("Bench.HeadlineSubset" -> Bench.HeadlineSubset.toSet,
+      "Bench.LifecycleQueries" -> Bench.LifecycleQueries,
+      "SparkEntry.FitQueries" -> SparkEntry.FitQueries,
+      "DumpPlans.Headline" -> DumpPlans.Headline.toSet).foreach {
+      case (list, names) =>
+        assert(names.subsetOf(qs), s"$list names unknown queries: " +
+          s"${names -- qs}")
+    }
   }
 
   test("approx_count_distinct estimates within 5% of exact (HLL sanity)") {
