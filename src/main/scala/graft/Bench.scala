@@ -128,13 +128,11 @@ object Bench {
             None
         }
       }
-      // query-scoped storage hygiene: drop the SQL cache and any
-      // persistent RDDs this query left behind (checkpoints, stray
-      // caches) so later queries don't inherit pinned blocks — the
-      // mechanism behind round 12's phantom 3-4x TPC-H tail
+      // query-scoped storage hygiene: drop the SQL cache, release the
+      // query's barriers, then sweep any other persistent RDD it left so
+      // later queries don't inherit pinned blocks — the mechanism
+      // behind round 12's phantom 3-4x TPC-H tail
       spark.catalog.clearCache()
-      // release the barrier registry first (the operators' own
-      // lifecycle), then sweep anything else to the baseline set
       Materialize.release(spark)
       val leftover =
         spark.sparkContext.getPersistentRDDs -- baselinePersistent

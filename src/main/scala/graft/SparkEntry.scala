@@ -1676,8 +1676,7 @@ object SparkEntry {
     * STREAMING operator. Windows still open at the final watermark
     * are excluded by both sides with the same inequality. */
   private val qTrendingExact: Q = (s, dir) => {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-trendx")
+    val base = Materialize.tempDir("graft-trendx")
     val corpus = base.resolve("corpus").toString
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -2299,8 +2298,7 @@ object SparkEntry {
     * with zero corpus access at query time. */
   private val qPostingsSearch: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
-    val idx = java.nio.file.Files.createTempDirectory("graft-postings")
-      .resolve("idx").toString
+    val idx = Materialize.tempDir("graft-postings").resolve("idx").toString
     TextSearch.buildPostings(docs.filter(col("doc_id") % 3 =!= 0), idx)
     TextSearch.extendPostings(docs.filter(col("doc_id") % 3 === 0), idx)
     TextSearch.bm25FromIndex(s, idx, "hash join stream", k = 25)
@@ -2316,7 +2314,7 @@ object SparkEntry {
     * precisely once (a duplicated batch would double tf). */
   private val qPostingsTail: Q = (s, dir) => {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val base = java.nio.file.Files.createTempDirectory("graft-ptail")
+    val base = Materialize.tempDir("graft-ptail")
     val corpus = base.resolve("corpus").toString
     val idx = base.resolve("idx").toString
     val ckpt = base.resolve("ckpt").toString

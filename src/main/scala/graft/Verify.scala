@@ -14,26 +14,27 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n)) }
     val baselinePersistent = spark.sparkContext.getPersistentRDDs.keySet
-    selected.foreach { case (name, fn) =>
+    val leaks = selected.toSeq.flatMap { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query storage hygiene, same as Bench: release the
-      // operators' materialization barriers, then sweep any other
-      // leftover persistent RDDs — a 250-query pass must not
-      // accumulate pinned checkpoint blocks
+      // per-query storage hygiene, same as Bench: drop the SQL cache
+      // and release the operators' materialization barriers; whatever
+      // they leave persisted is this query's leak, counted and then
+      // swept — a 250-query pass must not accumulate pinned blocks
       spark.catalog.clearCache()
       Materialize.release(spark)
       val leftover =
         spark.sparkContext.getPersistentRDDs -- baselinePersistent
       leftover.values.foreach(_.unpersist(blocking = false))
+      if (leftover.isEmpty) None else Some(name -> leftover.size)
     }
-    // no-leak rider: after a full pass nothing may remain persisted
-    val leaked =
-      spark.sparkContext.getPersistentRDDs.keySet -- baselinePersistent
-    println(s"[verify] persistent_rdds_after_pass=${leaked.size}")
+    // no-leak rider: what the per-query lifecycle left, summed
+    leaks.foreach { case (name, n) =>
+      println(s"[verify] $name left $n persistent RDDs") }
+    println(s"[verify] persistent_rdds_after_pass=${leaks.map(_._2).sum}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -636,6 +636,15 @@ case class HyperplaneBucket(child: Expression,
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)
   override def prettyName: String = "hyperplane_bucket"
+  // the planes compare by content, as DsirScoreSum's ratios do
+  private def grid = planes.asInstanceOf[Array[AnyRef]]
+  override def equals(o: Any): Boolean = o match {
+    case h: HyperplaneBucket =>
+      child == h.child && java.util.Arrays.deepEquals(grid, h.grid)
+    case _ => false
+  }
+  private lazy val contentHash = (child, java.util.Arrays.deepHashCode(grid)).##
+  override def hashCode(): Int = contentHash
 }
 
 /** IVF probe: the `nprobe` nearest coarse-quantizer centroids for a
@@ -665,6 +674,15 @@ case class NearestCells(child: Expression, centers: Array[Array[Double]],
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)
   override def prettyName: String = "nearest_cells"
+  // the centroids compare by content, as DsirScoreSum's ratios do
+  private def grid = centers.asInstanceOf[Array[AnyRef]]
+  override def equals(o: Any): Boolean = o match {
+    case n: NearestCells => child == n.child && nprobe == n.nprobe &&
+      java.util.Arrays.deepEquals(grid, n.grid)
+    case _ => false
+  }
+  private lazy val contentHash = (child, nprobe, java.util.Arrays.deepHashCode(grid)).##
+  override def hashCode(): Int = contentHash
 }
 
 /** PQ code array (one small int per subspace) of an embedding under

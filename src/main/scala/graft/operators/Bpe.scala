@@ -97,38 +97,14 @@ object Bpe {
       textCol: String = "text",
       driverWordLimit: Long = DriverWordLimit): BpeModel = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    // Track every checkpoint's storage so it is released when the
-    // model (plain driver-side data) has been extracted. Without
-    // this, the localCheckpoint blocks stay pinned for the JVM's
-    // lifetime — in a long-lived session that is a leak, and every
-    // job after a train() pays for it in executor memory pressure.
-    val created = scala.collection.mutable.ArrayBuffer.empty[Int]
-    try {
-      val words = trackedCheckpoint(wordCounts(docs, textCol)
-        .select(col("cnt"), charRep(col("w")).as("rep")), created)
+    // the checkpoints' storage is released once the model (plain
+    // driver-side data) has been extracted
+    graft.Materialize.scoped {
+      val words = graft.Materialize.barrierEager(wordCounts(docs, textCol)
+        .select(col("cnt"), charRep(col("w")).as("rep")))
       if (words.count() <= driverWordLimit) trainLocal(words, numMerges)
-      else trainDistributed(words, numMerges, created)
-    } finally unpersistIds(docs, created.toSeq)
-  }
-
-  /** `localCheckpoint` the frame and record which persistent RDDs the
-    * call created (before/after diff of the context's registry — the
-    * Dataset API exposes no handle to the checkpointed RDD itself), so
-    * [[train]] can unpersist them on exit. */
-  private def trackedCheckpoint(df: DataFrame,
-      created: scala.collection.mutable.ArrayBuffer[Int]): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint()
-    created ++= (sc.getPersistentRDDs.keySet -- before)
-    out
-  }
-
-  /** Unpersist any of `ids` still registered (non-blocking — the
-    * blocks are dead weight, not correctness state). */
-  private def unpersistIds(df: DataFrame, ids: Seq[Int]): Unit = {
-    val live = df.sparkSession.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
+      else trainDistributed(words, numMerges)
+    }
   }
 
   /** Exact incremental BPE on the collected word table: pair counts
@@ -202,11 +178,10 @@ object Bpe {
     BpeModel(merges.result())
   }
 
-  private def trainDistributed(words: DataFrame, numMerges: Int,
-      created: scala.collection.mutable.ArrayBuffer[Int]): BpeModel = {
-    val sc = words.sparkSession.sparkContext
-    var prevIds = Set.empty[Int]
+  private def trainDistributed(words: DataFrame, numMerges: Int)
+      : BpeModel = {
     var cur = words
+    var prev = Option.empty[DataFrame]
     val merges = Seq.newBuilder[(String, String)]
     var done = false
     var i = 0
@@ -240,12 +215,9 @@ object Bpe {
           if ((i + 1) % MaterializeEvery == 0) {
             // the new checkpoint supersedes the previous one — release
             // it now so at most two checkpoints are ever live
-            val before = sc.getPersistentRDDs.keySet
-            val cp = next.localCheckpoint()
-            val fresh = (sc.getPersistentRDDs.keySet -- before).toSet
-            created ++= fresh
-            unpersistIds(words, prevIds.toSeq)
-            prevIds = fresh
+            val cp = graft.Materialize.barrierEager(next)
+            prev.foreach(graft.Materialize.drop)
+            prev = Some(cp)
             cp
           } else next
       }

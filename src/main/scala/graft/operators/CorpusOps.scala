@@ -304,18 +304,19 @@ object CorpusOps {
       .option("readChangeFeed", "true").load()
       .writeStream.option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        deconFeedBatch(batch, indexPath, outTable, idCol, textCol,
-          maxBroadcastGrams)
-        for (id <- consumerId) {
-          val maxV = batch.agg(max(col(GraftCdf.CommitVersion))).head()
-          if (!maxV.isNullAt(0)) {
-            val t = new org.apache.hadoop.fs.Path(corpusPath)
-            GraftCdf.advanceConsumer(
-              t.getFileSystem(GraftHadoopConf.sessionConf()), t, id,
-              maxV.getLong(0))
+        graft.Materialize.scoped {
+          deconFeedBatch(batch, indexPath, outTable, idCol, textCol,
+            maxBroadcastGrams)
+          for (id <- consumerId) {
+            val maxV = batch.agg(max(col(GraftCdf.CommitVersion))).head()
+            if (!maxV.isNullAt(0)) {
+              val t = new org.apache.hadoop.fs.Path(corpusPath)
+              GraftCdf.advanceConsumer(
+                t.getFileSystem(GraftHadoopConf.sessionConf()), t, id,
+                maxV.getLong(0))
+            }
           }
         }
-        ()
       }
       .start()
   }

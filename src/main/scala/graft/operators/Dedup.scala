@@ -449,24 +449,6 @@ object Dedup {
     // edge seed both derive from this checkpoint (without it, the
     // final vertex join would re-execute the whole candidate
     // pipeline a second time)
-    val sc = pairs.sparkSession.sparkContext
-    // LAZY tracked checkpoint that also reports which persistent RDD
-    // ids it registered, so the fixpoint loop below can release each
-    // superseded generation immediately (at most two generations of
-    // edge state are ever live instead of one per round). Lazy: the
-    // round's convergence test is the first consumer and materializes
-    // the generation as a side effect — an eager checkpoint would pay
-    // one extra job per round just to force it (r20: the closure's
-    // cost at bench shapes is JOB overhead, not data).
-    def ckptGen(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.transform(graft.Materialize.barrier)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    def dropGen(ids: Set[Int]): Unit = {
-      val live = sc.getPersistentRDDs
-      ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-    }
     val raw = pairs
       .select(col(idACol).cast("long").as("u"),
         col(idBCol).cast("long").as("v"))
@@ -476,10 +458,15 @@ object Dedup {
       .union(raw.select(col("v").as("doc_id"))).distinct()
     // edges directed large -> small; both star steps preserve the
     // invariant (they emit (x, m) with m the group minimum, m < x)
-    var (edges, edgeIds) = ckptGen(raw.filter(col("u") =!= col("v"))
+    // each edge generation is a LAZY barrier, dropped once superseded
+    // (at most two generations live). Lazy: the round's convergence
+    // test is its first consumer and materializes it — an eager one
+    // would pay an extra job per round (r20: JOB overhead, not data).
+    var edges = raw.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct())
+      .distinct()
+      .transform(graft.Materialize.barrier)
     // large-star: every node x attaches its LARGER neighbors to
     // m = min(N(x) ∪ {x}) — breaks up high-degree hubs. Duplicate
     // emissions are NOT deduplicated here: small-star's min-group
@@ -533,15 +520,15 @@ object Dedup {
     var converged = isStarForest(edges)
     var rounds = 0
     while (!converged && rounds < 50) {
-      val (next, nextIds) = ckptGen(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges))
+        .transform(graft.Materialize.barrier)
       // the convergence test materializes the new generation (it is
       // the checkpoint's first consumer), so the previous generation
       // is dropped only AFTER next's blocks exist — a localCheckpoint
       // cannot be recomputed
       converged = isStarForest(next)
-      dropGen(edgeIds)
+      graft.Materialize.drop(edges)
       edges = next
-      edgeIds = nextIds
       rounds += 1
     }
     require(converged, s"connected components did not converge in " +

@@ -414,8 +414,10 @@ object TextSearch {
       .option("startingVersion", start.toString).load()
       .writeStream.option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyFeedBatch(batch, corpusPath, indexPath, consumerId,
-          idCol, textCol)
+        graft.Materialize.scoped {
+          applyFeedBatch(batch, corpusPath, indexPath, consumerId,
+            idCol, textCol)
+        }
       }
       .start()
   }

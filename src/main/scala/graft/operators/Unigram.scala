@@ -495,9 +495,8 @@ object Unigram {
     // segmentation + join-back), each of which would re-run the whole
     // corpus tokenize. Round 19 had to leave the double tokenize in
     // place because a checkpoint violated the no-leaked-storage
-    // contract; the Materialize release lifecycle (UnigramSpec's leak
-    // assert is now delta-based around `Materialize.release`) unblocks
-    // the barrier — one tokenize, storage reclaimed after the action.
+    // contract; the Materialize release lifecycle unblocks the
+    // barrier — one tokenize, storage reclaimed after the action.
     // (The final empty-doc join-back projects only idCol, so column
     // pruning keeps that third consumer off the tokenize path.)
     val occ = docws

@@ -504,8 +504,9 @@ object StreamOps {
     // window-vocabulary-sized, which is exactly the fallback arm's
     // existing shuffle scale; what the old pruning saved (candidate-
     // only shuffle) was bought with a full second corpus tokenize the
-    // moment ANY window fell back. The barrier storage is swept by the
-    // caller per batch (tailTrendingExact) and by the harnesses.
+    // moment ANY window fell back. The barrier storage belongs to the
+    // caller's scope: tailTrendingExact's batch scope, or a harness's
+    // release.
     val rollup = sliceTerms
       .groupBy(col("wstart"), col("term"))
       .agg(count(lit(1)).as("n"))
@@ -572,44 +573,36 @@ object StreamOps {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // ONE execution of the micro-batch plan per trigger: the
-        // summary collect doubles as the emptiness check (the old
-        // isEmpty pre-check re-ran the whole stateful plan — ~0.4 s a
-        // batch of pure re-execution in the phase profile)
-        val summary = batch
-          .select(col("wstart"), col("term"), col("total"))
-          .collect()
-          .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-        if (summary.nonEmpty) {
-          // the refinement's rollup barrier is batch-scoped: sweep the
-          // delta once the commit has consumed it, so a long-lived
-          // feed never accumulates checkpoint storage across batches
-          val sc = batch.sparkSession.sparkContext
-          val persistedBefore = sc.getPersistentRDDs.keySet
-          commitStreamBatch(
-            exactTrendingFromSummary(batch.sparkSession, summary,
-              corpusPath, k, counters, every, tsCol, textCol),
-            outPath, "trending-exact", id)
-          (sc.getPersistentRDDs.keySet -- persistedBefore).foreach {
-            rid => sc.getPersistentRDDs.get(rid)
-              .foreach(_.unpersist(blocking = false))
-          }
-          // output retention: one small commit lands per closed
-          // window, so a long-lived feed fragments the out table —
-          // compactEvery > 0 merges small files and vacuums old
-          // manifest versions on a batch cadence. Leave 0 (off) if a
-          // downstream graft-v2 STREAM tails the out table
-          // (compaction rewrites files, breaking the append-only
-          // contract; batch readers are unaffected).
-          if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-            graft.sources.GraftSink.compact(spark, outPath)
-            val t = new org.apache.hadoop.fs.Path(outPath)
-            graft.sources.v2.GraftManifest.vacuum(
-              t.getFileSystem(spark.sessionState.newHadoopConf()), t,
-              keepVersions = keepVersions)
+        graft.Materialize.scoped {
+          // ONE execution of the micro-batch plan per trigger: the
+          // summary collect doubles as the emptiness check (the old
+          // isEmpty pre-check re-ran the whole stateful plan — ~0.4 s a
+          // batch of pure re-execution in the phase profile)
+          val summary = batch
+            .select(col("wstart"), col("term"), col("total"))
+            .collect()
+            .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
+          if (summary.nonEmpty) {
+            commitStreamBatch(
+              exactTrendingFromSummary(batch.sparkSession, summary,
+                corpusPath, k, counters, every, tsCol, textCol),
+              outPath, "trending-exact", id)
+            // output retention: one small commit lands per closed
+            // window, so a long-lived feed fragments the out table —
+            // compactEvery > 0 merges small files and vacuums old
+            // manifest versions on a batch cadence. Leave 0 (off) if a
+            // downstream graft-v2 STREAM tails the out table
+            // (compaction rewrites files, breaking the append-only
+            // contract; batch readers are unaffected).
+            if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
+              graft.sources.GraftSink.compact(spark, outPath)
+              val t = new org.apache.hadoop.fs.Path(outPath)
+              graft.sources.v2.GraftManifest.vacuum(
+                t.getFileSystem(spark.sessionState.newHadoopConf()), t,
+                keepVersions = keepVersions)
+            }
           }
         }
-        ()
       }
       .start()
   }
@@ -630,9 +623,11 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.sources.GraftSink.saveAtomic(
-          batch, f"$dir/batch-$id%05d",
-          org.apache.spark.sql.SaveMode.Overwrite)
+        graft.Materialize.scoped {
+          graft.sources.GraftSink.saveAtomic(
+            batch, f"$dir/batch-$id%05d",
+            org.apache.spark.sql.SaveMode.Overwrite)
+        }
       }
       .start()
 
@@ -672,23 +667,25 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.sources.GraftSink.saveAtomic(
-          batch, dir, org.apache.spark.sql.SaveMode.Append)
-        val cadenceDue = compactEvery > 0 && id > 0 && id % compactEvery == 0
-        def countDue: Boolean = compactAtSmallFiles > 0 && {
-          val target = new org.apache.hadoop.fs.Path(dir)
-          val fs = target.getFileSystem(
-            batch.sparkSession.sessionState.newHadoopConf())
-          fs.listStatus(target).count { st =>
-            st.getPath.getName.startsWith("part-") &&
-              st.getLen < smallBytes
-          } >= compactAtSmallFiles
+        graft.Materialize.scoped {
+          graft.sources.GraftSink.saveAtomic(
+            batch, dir, org.apache.spark.sql.SaveMode.Append)
+          val cadenceDue = compactEvery > 0 && id > 0 && id % compactEvery == 0
+          def countDue: Boolean = compactAtSmallFiles > 0 && {
+            val target = new org.apache.hadoop.fs.Path(dir)
+            val fs = target.getFileSystem(
+              batch.sparkSession.sessionState.newHadoopConf())
+            fs.listStatus(target).count { st =>
+              st.getPath.getName.startsWith("part-") &&
+                st.getLen < smallBytes
+            } >= compactAtSmallFiles
+          }
+          if (cadenceDue || countDue) {
+            graft.sources.GraftSink.compact(
+              batch.sparkSession, dir, smallBytes, targetBytes)
+          }
+          ()
         }
-        if (cadenceDue || countDue) {
-          graft.sources.GraftSink.compact(
-            batch.sparkSession, dir, smallBytes, targetBytes)
-        }
-        ()
       }
       .start()
 
@@ -722,8 +719,9 @@ object StreamOps {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        commitStreamBatch(batch, dir, appId, id)
-        ()
+        graft.Materialize.scoped {
+          commitStreamBatch(batch, dir, appId, id)
+        }
       }
       .start()
 
@@ -887,20 +885,21 @@ object StreamOps {
     }
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyChanges(batch, table, keys)
-        for (p <- sourcePath; id <- consumerId) {
-          val maxV = batch
-            .agg(org.apache.spark.sql.functions.max(
-              col(GraftCdf.CommitVersion)))
-            .head()
-          if (!maxV.isNullAt(0)) {
-            val t = new org.apache.hadoop.fs.Path(p)
-            GraftCdf.advanceConsumer(
-              t.getFileSystem(GraftHadoopConf.sessionConf()), t, id,
-              maxV.getLong(0))
+        graft.Materialize.scoped {
+          applyChanges(batch, table, keys)
+          for (p <- sourcePath; id <- consumerId) {
+            val maxV = batch
+              .agg(org.apache.spark.sql.functions.max(
+                col(GraftCdf.CommitVersion)))
+              .head()
+            if (!maxV.isNullAt(0)) {
+              val t = new org.apache.hadoop.fs.Path(p)
+              GraftCdf.advanceConsumer(
+                t.getFileSystem(GraftHadoopConf.sessionConf()), t, id,
+                maxV.getLong(0))
+            }
           }
         }
-        ()
       }
       .start()
   }

@@ -155,10 +155,15 @@ class CorpusOpsSpec extends SparkTestBase {
 
     def monitor(): Seq[org.apache.spark.sql.Row] =
       spark.table(s"$cat.decon").orderBy($"doc_id").collect().toSeq
-    def operator(): Seq[org.apache.spark.sql.Row] = CorpusOps.decontaminateWithIndex(
-      spark.read.format("graft-v2").load(s"$wh/corpus"), idx)
-      .orderBy($"doc_id").collect().toSeq
+    // the operator's own barriers go with its scope, so that only the
+    // stream's could remain persisted
+    def operator(): Seq[org.apache.spark.sql.Row] = Materialize.scoped {
+      CorpusOps.decontaminateWithIndex(
+        spark.read.format("graft-v2").load(s"$wh/corpus"), idx)
+        .orderBy($"doc_id").collect().toSeq
+    }
 
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = CorpusOps.deconFeed(spark, s"$wh/corpus", idx,
       s"$cat.decon", ckpt, consumerId = Some("mon"))
     try {
@@ -181,6 +186,9 @@ class CorpusOpsSpec extends SparkTestBase {
       assert(monitor().exists(r => r.getLong(0) == 503L &&
         r.getBoolean(4)))
     } finally q.stop()
+    // each micro-batch released its own barriers
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leftover.isEmpty, s"the stream left rdd ids $leftover persisted")
 
     // replay convergence: re-applying the ENTIRE feed history is a
     // no-op on the monitor (deterministic scores + keyed MERGE)

@@ -52,17 +52,32 @@ class DsirParitySpec extends SparkTestBase {
     }
   }
 
+  // also covers HyperplaneBucket and NearestCells, whose planes and
+  // centroids compare by content the same way
   test("DsirScoreSum compares its ratios by content: equal instances " +
       "are ==, hash alike and are semanticEquals") {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    import graft.functions.DsirScoreSum
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+    import graft.functions.{DsirScoreSum, HyperplaneBucket, NearestCells}
     val gs = AttributeReference("_gs", ArrayType(StringType))()
-    val a = DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L))
-    val b = DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L))
-    assert(a == b)
-    assert(a.hashCode == b.hashCode)
-    assert(a.semanticEquals(b))
-    assert(a != DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 1L)))
+    val v = AttributeReference("_v", ArrayType(DoubleType))()
+    def grid(last: Double) = Array(Array(1.0, -2.0), Array(3.0, last))
+    // (a, b built from equal but distinct arrays, c differing in one value)
+    val cases: Seq[(Expression, Expression, Expression)] = Seq(
+      (DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L)),
+        DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 0L)),
+        DsirScoreSum(gs, 4, Array(1L, -2L, 3L, 1L))),
+      (HyperplaneBucket(v, grid(0.5)), HyperplaneBucket(v, grid(0.5)),
+        HyperplaneBucket(v, grid(0.25))),
+      (NearestCells(v, grid(0.5), 2), NearestCells(v, grid(0.5), 2),
+        NearestCells(v, grid(0.25), 2)),
+      (NearestCells(v, grid(0.5), 1), NearestCells(v, grid(0.5), 1),
+        NearestCells(v, grid(0.5), 2)))
+    cases.foreach { case (a, b, c) =>
+      assert(a == b, a)
+      assert(a.hashCode == b.hashCode, a)
+      assert(a.semanticEquals(b), a)
+      assert(a != c, c)
+    }
   }
 }

@@ -1,11 +1,18 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.util.Try
+
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.functions._
 
 /** The barrier/release lifecycle (round-20 gate item): every
   * `Materialize.barrier` site pins storage only until the harness's
   * per-query `Materialize.release` — nothing survives the release, and
-  * the barrier is a streaming no-op. */
+  * the barrier is a streaming no-op. A release frees only the calling
+  * thread's barriers, never a cache's buffers, and deletes a lifecycle
+  * query's scratch directory. */
 class MaterializeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -55,5 +62,64 @@ class MaterializeSpec extends SparkTestBase {
     val out = Materialize.barrier(s)
     assert(out.isStreaming)
     assert(out eq s, "streaming frame must pass through unchanged")
+  }
+
+  test("a release on one thread leaves another thread's barriers live") {
+    val built, released = new CountDownLatch(1)
+    @volatile var sums: Try[(Long, Long)] = null
+    val other = new Thread(() => {
+      sums = Try {
+        val df = (1 to 100).toDF("x")
+          .groupBy(($"x" % 7).as("k")).agg(sum($"x").as("s"))
+          .transform(Materialize.barrier)
+        try {
+          val first = df.agg(sum($"s")).as[Long].head()
+          built.countDown()
+          released.await()
+          (first, df.agg(sum($"s")).as[Long].head())
+        } finally {
+          built.countDown()
+          Materialize.release(spark)
+        }
+      }
+    })
+    other.start()
+    assert(built.await(2, TimeUnit.MINUTES))
+    Materialize.release(spark)
+    released.countDown()
+    other.join(TimeUnit.MINUTES.toMillis(2))
+    assert(sums.get === ((5050L, 5050L)))
+  }
+
+  test("release frees the barrier's own RDD, not a cache buffer its " +
+      "checkpoint built") {
+    val cached = (1 to 100).toDF("x").withColumn("y", $"x" * 2).cache()
+    try {
+      val cm = spark.asInstanceOf[classic.SparkSession].sharedState
+        .cacheManager
+      // the cache's buffers are first built by the checkpoint call
+      val df = cached.select(($"y" + 1).as("z"))
+        .transform(Materialize.barrier)
+      assert(df.count() === 100)
+      Materialize.release(spark)
+      assert(!cm.isEmpty, "CacheManager lost the cached frame")
+      val buffers = cm.lookupCachedData(
+        cached.asInstanceOf[classic.Dataset[_]]).get.cachedRepresentation
+        .cacheBuilder.cachedColumnBuffers
+      assert(spark.sparkContext.getPersistentRDDs.contains(buffers.id),
+        "release unpersisted the cache's buffer RDD")
+    } finally cached.unpersist()
+  }
+
+  test("a lifecycle query's scratch directory goes with its release") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def trendDirs(): Set[String] = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("graft-trendx"))
+    val before = trendDirs()
+    val rows = SparkEntry.queries("q_trending_exact")(spark, sf001).count()
+    assert(rows > 0L)
+    Materialize.release(spark)
+    val left = trendDirs() -- before
+    assert(left.isEmpty, s"release left $left")
   }
 }
