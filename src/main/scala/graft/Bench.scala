@@ -1,21 +1,16 @@
 package graft
 
-/** Benchmark harness: runs every SparkEntry query on
-  * `SPARK_GRAFT_SF_DIR`, forcing full materialization through the noop
-  * sink (a bare `count()` would let Catalyst prune projections, windows
-  * and sorts, under-measuring the plan actually shipped). Prints one JSON
-  * line: total + per-query seconds.
+/** Benchmark main: times every SparkEntry query on `SPARK_GRAFT_SF_DIR`
+  * through [[Harness]]'s per-query loop and its min-of-N noop-sink timer
+  * (`SPARK_GRAFT_BENCH_RUNS`, default 3), evicting a fit query's model
+  * before each run. `SPARK_GRAFT_BENCH_QUERIES=headline` (or a comma
+  * list of names) runs the pinned regression subset in a fresh JVM — the
+  * low-noise diff target recorded in BASELINE.md.
   *
-  * Hygiene (the 104-query serial JVM was proven to smear multi-x
-  * phantom regressions onto alphabetically-late queries):
-  *  - after each query, the SQL cache and any persistent RDDs the
-  *    query left behind are cleared (the memoized MODELS — IVF, BPE,
-  *    quality — are plain driver-side Scala data and survive);
-  *  - every per-query timing is printed incrementally with a running
-  *    total, so a truncated log never loses the ledger;
-  *  - `SPARK_GRAFT_BENCH_QUERIES=headline` (or a comma list of names)
-  *    runs the pinned regression subset in a fresh JVM — the
-  *    low-noise diff target recorded in BASELINE.md.
+  * Prints one JSON line per query with a running total (a truncated log
+  * keeps the ledger), writes the full ledger to `SPARK_GRAFT_BENCH_OUT`
+  * (default `BENCH_LOCAL.json`), then prints a compact summary and, last,
+  * the full `{"metric":"total",…,"queries":{…}}` line.
   */
 object Bench {
 
@@ -74,15 +69,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession()
-    // one warm-up action so JVM/codegen startup isn't billed to the
-    // first query
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
-    // pre-fit the shared models: the operators' contract is train-once
-    // / apply-many, so steady-state query cost — what the bench
-    // measures everywhere else — excludes the one-time fits
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_PREFIT"))
-      SparkEntry.prefitModels(spark, sfDir)
     // min of `runs` executions per query: a single serial pass bills
     // whichever queries run last for the accumulated JIT/GC state (the
     // sandbox is ±30% noisy, and one stall smeared a 4-6x phantom
@@ -95,55 +81,26 @@ object Bench {
     // runs make a double-stall phantom an order rarer.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map {
-      case "headline" => HeadlineSubset.toSet
-      case csv        => csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      case "headline" => HeadlineSubset
+      case csv        => csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => subset.forall(_.contains(n)) }
-    subset.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown bench queries: $unknown")
-    }
-    val baselinePersistent = spark.sparkContext.getPersistentRDDs.keySet
+    val names = Harness.select(subset.getOrElse(Nil)).distinct.sorted
+    val spark = Harness.session()
+    Harness.setUp(spark, sfDir)
     var running = 0.0
-    val results = selected.map { case (name, fn) =>
-      // min over SUCCESSFUL runs only — a fast-failing run's latency
-      // is not a timing, and folding it into min would report a
-      // phantom speedup while the failure scrolls past on stderr. A
-      // query failing every run reports -1 (unmissable in the JSON).
-      val times = (1 to runs).flatMap { _ =>
-        // honest train timings (round-19 verdict item 7): a fit-family
-        // query must time a REAL fit, not a memo lookup — evict its
-        // model before every run. Apply-side queries are untouched
-        // (the memo repopulates during the timed fit, so later encode/
-        // score queries still ride train-once/apply-many).
+    val results = Harness.eachQuery(spark, "bench", names) { (name, build) =>
+      // a fit-family query must time a REAL fit, not a memo lookup —
+      // evict its model before every run. Apply-side queries are
+      // untouched (the memo repopulates during the timed fit, so later
+      // encode/score queries still ride train-once/apply-many).
+      val best = Harness.minOfN(runs, "bench", name) {
         SparkEntry.evictTrainedModel(name, sfDir)
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            None
-        }
+        build(sfDir)
       }
-      // query-scoped storage hygiene: drop the SQL cache, release the
-      // query's barriers, then sweep any other persistent RDD it left so
-      // later queries don't inherit pinned blocks — the mechanism
-      // behind round 12's phantom 3-4x TPC-H tail
-      spark.catalog.clearCache()
-      Materialize.release(spark)
-      val leftover =
-        spark.sparkContext.getPersistentRDDs -- baselinePersistent
-      leftover.values.foreach(_.unpersist(blocking = false))
-      val best = if (times.isEmpty) -1.0 else times.min
       running += best
-      // incremental ledger: a truncated log keeps every finished
-      // query and the running total
       println(f"""{"metric":"query","name":"$name","sec":$best%.3f,"running_total":$running%.3f}""")
-      name -> best
-    }
+      best
+    }.map(o => o.name -> o.result.getOrElse(-1.0))
     val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -163,14 +120,9 @@ object Bench {
       s""","operator_tier":{${rate(opQ)}},"lifecycle_tier":{${rate(lifeQ)}},"fit_tier":{${rate(fitQ)}}"""
     val full =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs$sub$tiers}"""
-    // FILE ledger: the driver captures only the last ~2 KB of stdout,
-    // which a 250-entry queries map outruns — printing the full line
-    // to stdout is what POISONED the round 18/19 tail captures (the
-    // 6 KB line landed mid-tail, unparseable, and PERF's per_query
-    // came up empty two rounds running). The full line goes ONLY to
-    // the ledger file; stdout ends with a compact summary line that
-    // always fits the captured tail whole and carries the ledger's
-    // ABSOLUTE path so the driver can read the per-query map from it.
+    // the ledger file and the compact line (with the ledger's absolute
+    // path) keep the per-query map reachable from a truncated stdout
+    // tail; the full line ends stdout for a reader of stdout alone
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_LOCAL.json")
     try {
@@ -183,6 +135,7 @@ object Bench {
     }
     val ledgerAbs = java.nio.file.Paths.get(outPath).toAbsolutePath
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":${results.count(_._2 < 0)},"sf":"$sfDir","runs":$runs,"ledger":"$ledgerAbs"$sub$tiers}""")
+    println(full)
     spark.stop()
   }
 }

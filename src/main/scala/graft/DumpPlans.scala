@@ -1,12 +1,15 @@
 package graft
 
-/** Dev utility: dumps `.explain("formatted")` of the headline queries to
+/** Dev main: dumps `.explain("formatted")` of the headline queries to
   * PLANS.md — the explain-and-iterate evidence trail for plan quality
   * (pushdown reaching scans, broadcasts, TakeOrderedAndProject, partial
   * aggregation, single-shuffle as-of).
   *
-  * Usage: `runMain graft.DumpPlans [dir] [out] [q_name ...]`; trailing
-  * query names replace the headline list in the same markdown.
+  * Usage: `runMain graft.DumpPlans [dir] [out] [q ...]`; trailing query
+  * names replace the headline list in the same markdown. Each plan is
+  * built in [[Harness]]'s per-query loop, so what building it
+  * materialized is released before the next, and a query that fails to
+  * plan is reported and left out.
   */
 object DumpPlans {
   val Headline: Seq[String] = Seq(
@@ -64,8 +67,8 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val names = if (args.length > 2) args.drop(2).toSeq else Headline
-    val spark = LocalSession()
+    val names = Harness.select(args.drop(2).toSeq, Headline)
+    val spark = Harness.session()
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.DumpPlans` on `$dir`. Things to see:\n")
@@ -74,9 +77,8 @@ object DumpPlans {
     sb.append("`BroadcastHashJoin` for dims, `TakeOrderedAndProject` for ")
     sb.append("top-k, partial+final `HashAggregate`,\nand a single ")
     sb.append("`Exchange hashpartitioning` feeding the as-of window.\n")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
+    Harness.eachQuery(spark, "plans", names) { (name, build) =>
+      val plan = build(dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }

@@ -17,12 +17,16 @@ import org.apache.spark.sql.functions._
   * OUTPUT legitimately grows quadratically in the clone count and
   * runtime says nothing about the candidate-generation guards.
   *
-  * Usage: runMain graft.ScaleProbe [factor] (default 10); base dir from
-  * SPARK_GRAFT_SF_DIR (default sf0.1). Prints one JSON line per query.
+  * Usage: `runMain graft.ScaleProbe [factor] [q ...]` (factor default
+  * 10; trailing query names replace [[ProbeQueries]]); base dir from
+  * SPARK_GRAFT_SF_DIR (default sf0.1). The queries run through
+  * [[Harness]]'s per-query loop, min-of-2 at each scale; one JSON line
+  * per query, `-1` for a side whose runs all failed. Structural probes
+  * (bucketed join, stats-aligned DELETE, DV, ...) follow.
   */
 object ScaleProbe {
 
-  private val probeQueries = Seq(
+  val ProbeQueries: Seq[String] = Seq(
     "q_scan_project", "q_scan_v2", "q_filter_pushdown",
     "q_partitioned_scan", "q_agg_hash", "q_window_rank",
     "q_window_rank_hk",
@@ -189,40 +193,25 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
+    val names = Harness.select(args.drop(1).toSeq, ProbeQueries)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // events.ts is TIMESTAMP(NANOS): read as long for the verbatim
     // copy (Tables.t converts to micros downstream either way)
     val spark =
-      LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      Harness.session("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val scaled = Files.createTempDirectory("graft-scale").toString
     inflate(spark, base, scaled, factor)
+    Harness.setUp(spark, base, scaled)
 
-    def timeOnce(q: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // warm each dir's file cache / codegen once
-    spark.read.parquet(s"$scaled/lineitem.parquet").count()
-    // steady-state model contract (same as Bench): the one-time fits
-    // happen outside the timed runs, for BOTH dirs
-    Seq(base, scaled).foreach(SparkEntry.prefitModels(spark, _))
-
-    // SPARK_GRAFT_PROBE_QUERIES=a,b probes a subset (iterating on one
-    // operator's ratio without paying the full ~1 h sweep)
-    val selected = sys.env.get("SPARK_GRAFT_PROBE_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .map(s => probeQueries.filter(s.contains))
-      .getOrElse(probeQueries)
     var worst = 0.0
-    selected.foreach { q =>
-      // two runs each, keep the min — the sandbox is ±30% noisy
-      val t1 = math.min(timeOnce(q, base), timeOnce(q, base))
-      val tN = math.min(timeOnce(q, scaled), timeOnce(q, scaled))
-      val ratio = tN / math.max(t1, 0.001)
-      val flag = if (ratio > factor * 2.5) "SUPRALINEAR" else "ok"
+    Harness.eachQuery(spark, "scale", names) { (q, build) =>
+      val t1 = Harness.minOfN(2, "scale", q)(build(base))
+      val tN = Harness.minOfN(2, "scale", q)(build(scaled))
+      val ratio = if (t1 < 0 || tN < 0) -1.0 else tN / math.max(t1, 0.001)
+      val flag =
+        if (ratio < 0) "failed" else if (ratio > factor * 2.5) "SUPRALINEAR"
+        else "ok"
       worst = math.max(worst, ratio)
       println(f"""{"q":"$q","t1":$t1%.2f,"t$factor":$tN%.2f,""" +
         f""""ratio":$ratio%.2f,"verdict":"$flag"}""")

@@ -35,7 +35,7 @@ class BucketingSpec extends SparkTestBase {
   test("graft sink writes a bucketed layout that joins shuffle-free") {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
-    val base = java.nio.file.Files.createTempDirectory("graft-bucketed")
+    val base = tempDir("graft-bucketed")
     val li = Tables.t(spark, sf001, "lineitem")
     val o = Tables.t(spark, sf001, "orders")
     GraftSink.saveBucketedTable(li, "li_graft_b", s"$base/li", 8,
@@ -83,7 +83,7 @@ class BucketingSpec extends SparkTestBase {
   test("skewed bucket rolls into multiple files, still one bucket") {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
-    val base = java.nio.file.Files.createTempDirectory("graft-bucketed-r")
+    val base = tempDir("graft-bucketed-r")
     val li = Tables.t(spark, sf001, "lineitem")
     // force rollover: ~6000 rows over 4 buckets, max 500 rows per file
     GraftSink.saveBucketedTable(li, "li_graft_roll", s"$base/li", 4,
@@ -130,7 +130,7 @@ class BucketingSpec extends SparkTestBase {
   test("catalog reads of bucketed layouts plan storage-partitioned joins") {
     import graft.sources.{BucketLayout, GraftSink}
     import org.apache.spark.sql.SaveMode
-    val wh = java.nio.file.Files.createTempDirectory("graft-spj").toString
+    val wh = tempDir("graft-spj").toString
     spark.conf.set("spark.sql.catalog.spjcat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjcat.warehouse", wh)
@@ -182,7 +182,7 @@ class BucketingSpec extends SparkTestBase {
     import graft.sources.{BucketLayout, GraftSink}
     import org.apache.spark.sql.SaveMode
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-spjw").toString
+    val wh = tempDir("graft-spjw").toString
     spark.conf.set("spark.sql.catalog.spjwcat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjwcat.warehouse", wh)
@@ -229,8 +229,7 @@ class BucketingSpec extends SparkTestBase {
     assert(e5.getMessage.contains("bucketed layout"), e5.getMessage)
     // a bucketed APPEND onto unsuffixed files would stamp a marker the
     // files cannot honor — refused
-    val plainDir = java.nio.file.Files
-      .createTempDirectory("graft-spjw-plain").resolve("p").toString
+    val plainDir = tempDir("graft-spjw-plain").resolve("p").toString
     n.write.parquet(plainDir)
     val e6 = intercept[IllegalArgumentException] {
       GraftSink.saveBucketedFiles(n, plainDir, 4, Seq("n_nationkey"),
@@ -248,7 +247,7 @@ class BucketingSpec extends SparkTestBase {
     import graft.sources.v2.{GraftInputPartition, GraftScanBuilderV2}
     import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.sources._
-    val base = java.nio.file.Files.createTempDirectory("graft-bprune")
+    val base = tempDir("graft-bprune")
     val o = Tables.t(spark, sf001, "orders")
     GraftSink.saveBucketedFiles(o, s"$base/o", 8, Seq("o_orderkey"),
       mode = SaveMode.Overwrite)
@@ -326,7 +325,7 @@ class BucketingSpec extends SparkTestBase {
     import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val wh = java.nio.file.Files.createTempDirectory("graft-spjs").toString
+    val wh = tempDir("graft-spjs").toString
     spark.conf.set("spark.sql.catalog.spjscat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjscat.warehouse", wh)
@@ -372,7 +371,7 @@ class BucketingSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-spjm").toString
+    val wh = tempDir("graft-spjm").toString
     spark.conf.set("spark.sql.catalog.spjmcat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjmcat.warehouse", wh)
@@ -466,7 +465,7 @@ class BucketingSpec extends SparkTestBase {
     import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-spjc").toString
+    val wh = tempDir("graft-spjc").toString
     spark.conf.set("spark.sql.catalog.spjccat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjccat.warehouse", wh)
@@ -519,7 +518,7 @@ class BucketingSpec extends SparkTestBase {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-spjp").toString
+    val wh = tempDir("graft-spjp").toString
     spark.conf.set("spark.sql.catalog.spjpcat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.spjpcat.warehouse", wh)
@@ -592,7 +591,7 @@ class BucketingSpec extends SparkTestBase {
   test("bucketed compact merges per bucket and keeps co-location") {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
-    val base = java.nio.file.Files.createTempDirectory("graft-spjc")
+    val base = tempDir("graft-spjc")
     val li = Tables.t(spark, sf001, "lineitem")
     // rollover forces several small files per bucket
     GraftSink.saveBucketedFiles(li, s"$base/li", 4, Seq("l_orderkey"),
@@ -641,7 +640,7 @@ class BucketingSpec extends SparkTestBase {
   test("bucketed save modes: ErrorIfExists throws, Ignore no-ops") {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
-    val base = java.nio.file.Files.createTempDirectory("graft-bucketed-m")
+    val base = tempDir("graft-bucketed-m")
     val n = Tables.t(spark, sf001, "nation")
     try {
       GraftSink.saveBucketedTable(n, "n_graft_b", s"$base/n1", 4,
@@ -660,7 +659,7 @@ class BucketingSpec extends SparkTestBase {
   test("bucketed append validates the existing spec, never re-registers") {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
-    val base = java.nio.file.Files.createTempDirectory("graft-bucketed-a")
+    val base = tempDir("graft-bucketed-a")
     val n = Tables.t(spark, sf001, "nation")
     try {
       GraftSink.saveBucketedTable(n, "n_graft_app", s"$base/n", 4,
@@ -922,8 +921,7 @@ class BucketingSpec extends SparkTestBase {
     val model2 = Ann.trainIvf(emb, nlist = 16)
     assert(model.centers.flatten.toSeq == model2.centers.flatten.toSeq)
     // persistence: save/load round-trips the quantizer exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf")
-      .resolve("m").toString
+    val dir = tempDir("graft-ivf").resolve("m").toString
     Ann.saveIvf(spark, model, dir)
     val loaded = Ann.loadIvf(spark, dir)
     assert(loaded.centers.map(_.toSeq).toSeq ==

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
 class CatalogSpec extends SparkTestBase {
 
   private lazy val warehouse = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-catalog")
-      .toString
+    val dir = tempDir("graft-catalog").toString
     spark.conf.set("spark.sql.catalog.graft",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", dir)
@@ -148,8 +147,7 @@ class CatalogSpec extends SparkTestBase {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.st")
     spark.sql("CREATE TABLE graft.st.t (id BIGINT)")
     spark.sql("INSERT INTO graft.st.t SELECT id FROM range(0, 40)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cat-stream")
-      .toString
+    val ckpt = tempDir("graft-cat-stream").toString
     val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q = spark.readStream.table("graft.st.t")
       .writeStream.outputMode("append")
@@ -819,8 +817,7 @@ class CatalogSpec extends SparkTestBase {
       "top-level columns, and the sidecar round-trips them") {
     val _ = warehouse
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stats-dots").toString
+    val dir = tempDir("graft-stats-dots").toString
     Seq((1L, "aa"), (2L, "bb"), (2L, null))
       .toDF("a.b", "s:x").write.format("graft-v2")
       .mode("overwrite").save(dir)
@@ -2586,8 +2583,7 @@ class CatalogSpec extends SparkTestBase {
       "(1, 'lazy dogs sleep all day long'), " +
       "(2, 'said the quick brown fox yesterday evening'), " +
       "(3, 'quick brown fox')")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-call-decon").toString
+    val idx = tempDir("graft-call-decon").toString
     val built = spark.sql("CALL graft.system.decon_index(" +
       s"table => 'dcx.bench', path => '$idx')").head()
     // 'the quick brown fox jumps over fences' = 5 distinct 3-grams

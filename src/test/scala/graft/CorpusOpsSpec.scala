@@ -77,8 +77,7 @@ class CorpusOpsSpec extends SparkTestBase {
       3L -> "quick brown fox",
       4L -> "box with five dozen assorted things",
       5L -> "")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-decon-idx").toString
+    val dir = tempDir("graft-decon-idx").toString
     CorpusOps.buildDeconIndex(bench, dir, n = 3)
     val adHoc = CorpusOps.decontaminate(corpus, bench, n = 3)
       .orderBy($"doc_id").collect().toSeq
@@ -125,14 +124,12 @@ class CorpusOpsSpec extends SparkTestBase {
   test("deconFeed: the monitor table tracks the live corpus through " +
       "inserts, updates and deletes; a replayed window converges") {
     import graft.sources.v2.GraftCdf
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-deconfeed").toString
+    val wh = tempDir("graft-deconfeed").toString
     val cat = "graft_deconfeed"
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    val aux = java.nio.file.Files
-      .createTempDirectory("graft-deconfeed-aux")
+    val aux = tempDir("graft-deconfeed-aux")
     val idx = aux.resolve("idx").toString
     val ckpt = aux.resolve("ckpt").toString
     CorpusOps.buildDeconIndex(docs(

@@ -21,8 +21,7 @@ class CoverageSpec extends SparkTestBase {
 
   test("csv round-trip preserves values") {
     val src = Tables.t(spark, sf001, "nation")
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv")
-      .resolve("n").toString
+    val dir = tempDir("graft-csv").resolve("n").toString
     src.write.option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").schema(src.schema).csv(dir)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
@@ -30,8 +29,7 @@ class CoverageSpec extends SparkTestBase {
 
   test("json round-trip preserves values") {
     val src = Tables.t(spark, sf001, "customer")
-    val dir = java.nio.file.Files.createTempDirectory("graft-json")
-      .resolve("c").toString
+    val dir = tempDir("graft-json").resolve("c").toString
     src.write.json(dir)
     val back = spark.read.schema(src.schema).json(dir)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
@@ -39,8 +37,7 @@ class CoverageSpec extends SparkTestBase {
 
   test("orc round-trip preserves values") {
     val src = Tables.t(spark, sf001, "supplier")
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc")
-      .resolve("s").toString
+    val dir = tempDir("graft-orc").resolve("s").toString
     src.write.orc(dir)
     val back = spark.read.orc(dir)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
@@ -48,8 +45,7 @@ class CoverageSpec extends SparkTestBase {
 
   test("graft relation reads a directory of parquet files") {
     val src = Tables.t(spark, sf001, "orders")
-    val dir = java.nio.file.Files.createTempDirectory("graft-dir")
-      .resolve("multi").toString
+    val dir = tempDir("graft-dir").resolve("multi").toString
     src.repartition(3).write.parquet(dir)
     val viaGraft = spark.read.format("graft").option("path", dir).load()
     assert(viaGraft.count() == src.count())

@@ -22,7 +22,7 @@ class GraftRelationSpec extends SparkTestBase {
   }
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-rel").toString
+    tempDir("graft-rel").toString
 
   test("schema parity: the driver-side footer read equals spark.read.parquet") {
     val base = tmpDir()
@@ -178,5 +178,12 @@ class GraftRelationSpec extends SparkTestBase {
     val df = spark.read.format("graft")
       .option("path", s"$sf001/nation.parquet").load()
     assert(df.count() == 25)
+  }
+
+  test("format(\"graft\") without a path option fails with a clear error") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft").load()
+    }
+    assert(e.getMessage == "graft source requires a 'path' option")
   }
 }

@@ -13,7 +13,7 @@ import graft.sources.{GraftSink, Retry}
 class GraftSinkSpec extends SparkTestBase {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sink").resolve("out").toString
+    tempDir("graft-sink").resolve("out").toString
 
   private def nation = spark.read.parquet(s"$sf001/nation.parquet")
 
@@ -38,6 +38,11 @@ class GraftSinkSpec extends SparkTestBase {
   test("write.format(\"graft\") applies the SaveMode matrix") {
     val dir = tmp()
     nation.write.format("graft").option("path", dir).save()
+    assert(spark.read.parquet(dir).count() == 25)
+    // the default mode is ErrorIfExists: a second plain save refuses
+    intercept[AnalysisException] {
+      nation.write.format("graft").option("path", dir).save()
+    }
     assert(spark.read.parquet(dir).count() == 25)
     nation.limit(3).write.format("graft").option("path", dir)
       .mode(SaveMode.Overwrite).save()
@@ -114,7 +119,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("replaceWhere: stats-aligned predicate never rewrites a file") {
     import org.apache.spark.sql.sources.GreaterThanOrEqual
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rw").resolve("t").toString
+    val dir = tempDir("graft-rw").resolve("t").toString
     // four files with exact disjoint id ranges
     (0 until 4).foreach { i =>
       spark.range(i * 1000L, (i + 1) * 1000L).toDF("id")
@@ -145,7 +150,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("replaceWhere: boundary file is rewritten, not dropped") {
     import org.apache.spark.sql.sources.GreaterThan
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rwb").resolve("t").toString
+    val dir = tempDir("graft-rwb").resolve("t").toString
     (0 until 2).foreach { i =>
       spark.range(i * 1000L, (i + 1) * 1000L).toDF("id")
         .withColumn("v", col("id")).coalesce(1)
@@ -165,7 +170,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("replaceWhere: NULL predicate rows are kept (SQL DELETE semantics)") {
     import org.apache.spark.sql.sources.GreaterThan
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rwn").resolve("t").toString
+    val dir = tempDir("graft-rwn").resolve("t").toString
     Seq[(java.lang.Long, java.lang.Long)]((1L, 10L), (2L, null), (3L, 99L))
       .toDF("id", "v").coalesce(1).write.parquet(dir)
     val repl = Seq((100L, 50L)).toDF("id", "v")
@@ -177,7 +182,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("replaceWhere: unsupported predicate fails before any mutation") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rwu").resolve("t").toString
+    val dir = tempDir("graft-rwu").resolve("t").toString
     spark.range(0, 100).toDF("id").withColumn("v", col("id"))
       .coalesce(1).write.parquet(dir)
     val before = new java.io.File(dir).listFiles().map(_.getName).toSet
@@ -200,7 +205,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("replaceWhere accepts a SQL predicate string") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rws").resolve("t").toString
+    val dir = tempDir("graft-rws").resolve("t").toString
     spark.range(0, 100).toDF("id").withColumn("v", col("id") % 10)
       .coalesce(1).write.parquet(dir)
     val repl = Seq((200L, 99L)).toDF("id", "v")
@@ -219,7 +224,7 @@ class GraftSinkSpec extends SparkTestBase {
     assert(e.getMessage.contains("cannot translate"), e.getMessage)
     assert(spark.read.parquet(dir).count() == 91)
     // LIKE translates via its anchored shapes
-    val sdir = Files.createTempDirectory("graft-rwl").resolve("t").toString
+    val sdir = tempDir("graft-rwl").resolve("t").toString
     Seq((1L, "alpha"), (2L, "beta"), (3L, "alps"))
       .toDF("id", "s").coalesce(1).write.parquet(sdir)
     GraftSink.replaceWhere(Seq((9L, "x")).toDF("id", "s"), sdir,
@@ -235,7 +240,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("replaceWhere through the writer option") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rwo").resolve("t").toString
+    val dir = tempDir("graft-rwo").resolve("t").toString
     spark.range(0, 100).toDF("id").withColumn("v", col("id") % 10)
       .coalesce(1).write.parquet(dir)
     Seq((500L, 7L)).toDF("id", "v").write.format("graft")
@@ -255,7 +260,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("replaceWhere retention shape: timestamp predicate from SQL") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rwt").resolve("t").toString
+    val dir = tempDir("graft-rwt").resolve("t").toString
     val orders = spark.read.parquet(s"$sf001/orders.parquet")
       .select(col("o_orderkey"), col("o_orderdate"))
     val cut = "1998-01-01 00:00:00"
@@ -295,7 +300,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("compact merges small files, leaves big ones untouched") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cmp").resolve("t").toString
+    val dir = tempDir("graft-cmp").resolve("t").toString
     // 8 tiny files + 1 larger file
     (0 until 8).foreach { i =>
       spark.range(i * 10L, (i + 1) * 10L).toDF("id")
@@ -345,8 +350,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("compact WHERE: only stats-overlapping files merge; the cold " +
       "tail is untouched") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-where")
-      .resolve("t").toString
+    val dir = tempDir("graft-compact-where").resolve("t").toString
     // 8 range-clustered small files: ids [i*1000, (i+1)*1000)
     (0 until 8).foreach { i =>
       spark.range(i * 1000, (i + 1) * 1000).toDF("id")
@@ -373,8 +377,7 @@ class GraftSinkSpec extends SparkTestBase {
 
   test("compactClustered: z-order rewrite prunes on BOTH keys") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder")
-      .resolve("t").toString
+    val dir = tempDir("graft-zorder").resolve("t").toString
     // two independent pseudo-uniform keys; 16 hash-shuffled files so
     // every file initially spans the FULL range of both — stats
     // pruning can skip nothing
@@ -420,8 +423,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("compactClustered(curve=hilbert): prunes on BOTH keys and " +
       "files cover tighter regions than unclustered") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hilbert")
-      .resolve("t").toString
+    val dir = tempDir("graft-hilbert").resolve("t").toString
     val df = spark.range(0, 200000).select(
       $"id",
       (abs(hash($"id")) % 1000).as("x"),
@@ -458,8 +460,7 @@ class GraftSinkSpec extends SparkTestBase {
   test("compactClustered: a STRING cluster key rides the byte-prefix " +
       "lane and prunes alongside a numeric one") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zorder-str")
-      .resolve("t").toString
+    val dir = tempDir("graft-zorder-str").resolve("t").toString
     // string key: pseudo-uniform 3-letter codes; numeric key
     // independent — hash-shuffled files span both ranges fully
     val df = spark.range(0, 200000).select(

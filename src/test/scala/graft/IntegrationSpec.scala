@@ -36,7 +36,8 @@ class IntegrationSpec extends SparkTestBase {
     Seq("Bench.HeadlineSubset" -> Bench.HeadlineSubset.toSet,
       "Bench.LifecycleQueries" -> Bench.LifecycleQueries,
       "SparkEntry.FitQueries" -> SparkEntry.FitQueries,
-      "DumpPlans.Headline" -> DumpPlans.Headline.toSet).foreach {
+      "DumpPlans.Headline" -> DumpPlans.Headline.toSet,
+      "ScaleProbe.ProbeQueries" -> ScaleProbe.ProbeQueries.toSet).foreach {
       case (list, names) =>
         assert(names.subsetOf(qs), s"$list names unknown queries: " +
           s"${names -- qs}")
@@ -67,7 +68,7 @@ class IntegrationSpec extends SparkTestBase {
 
   test("file-source stream over events matches the batch tumbling agg") {
     // copy the events parquet into a stream-source dir
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     val src = java.nio.file.Paths.get(s"$sf001/events.parquet")
     java.nio.file.Files.copy(src, dir.resolve("events.parquet"))
 

@@ -30,8 +30,7 @@ class IsolationSpec extends AnyFunSuite {
 class WriterSugarSpec extends SparkTestBase {
   test("df.write.graft(path) implicit works like format(\"graft\")") {
     import graft._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sugar")
-      .resolve("n").toString
+    val dir = tempDir("graft-sugar").resolve("n").toString
     spark.read.parquet(s"$sf001/nation.parquet").write.graft(dir)
     assert(spark.read.parquet(dir).count() == 25)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
 import org.apache.spark.sql.functions._
 
 import graft.sources.GraftRelation
@@ -146,5 +148,34 @@ class LimitPushdownSpec extends SparkTestBase {
   test("limit 0 yields empty result") {
     val df = Tables.graftScan(spark, sf001, "lineitem").limit(0)
     assert(df.count() == 0)
+  }
+
+  test("spark.sql.extensions=graft.GraftExtensions alone pushes a " +
+      "format(\"graft\") limit: GraftRelation [limit=5] under LocalLimit") {
+    // Spark instantiates a spark.sql.extensions class by name, through
+    // its no-arg constructor, for each new session; the shared test
+    // context was built without the conf, so load the class the same way
+    // onto a sibling session (whose optimizer has no extra rules)
+    val ext = Class.forName("graft.GraftExtensions").getConstructor()
+      .newInstance().asInstanceOf[SparkSessionExtensions => Unit]
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = try SparkSession.builder().withExtensions(ext).getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(base)
+        SparkSession.setActiveSession(base)
+      }
+    assert(s ne base)
+    assert(s.experimental.extraOptimizations.isEmpty)
+    val df = s.read.format("graft")
+      .option("path", s"$sf001/lineitem.parquet").load().limit(5)
+    val plan = df.queryExecution.optimizedPlan
+    val underLimit = plan.collect { case l: LocalLimit =>
+      l.child.collect { case lr: LogicalRelation => lr.relation.toString }
+    }.flatten
+    assert(underLimit === Seq("GraftRelation(lineitem.parquet) [limit=5]"),
+      plan.toString)
+    assert(df.collect().length === 5)
   }
 }

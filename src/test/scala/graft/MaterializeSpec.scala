@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * per-query `Materialize.release` — nothing survives the release, and
   * the barrier is a streaming no-op. A release frees only the calling
   * thread's barriers, never a cache's buffers, and deletes a lifecycle
-  * query's scratch directory. */
+  * query's temp directory. The last cases drive [[Harness]]'s
+  * per-query loop, the one every main runs queries through. */
 class MaterializeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -121,5 +122,60 @@ class MaterializeSpec extends SparkTestBase {
     Materialize.release(spark)
     val left = trendDirs() -- before
     assert(left.isEmpty, s"release left $left")
+  }
+
+  private def tmpDirs(prefix: String): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .toSet.flatten.filter(_.startsWith(prefix))
+
+  test("the harness loop refuses an unknown query before running any") {
+    var ran = 0
+    val e = intercept[IllegalArgumentException] {
+      Harness.eachQuery(spark, "spec", Seq("q_scan_project", "q_no_such")) {
+        (_, _) => ran += 1
+      }
+    }
+    assert(e.getMessage.contains("q_no_such"), e.getMessage)
+    assert(ran === 0)
+  }
+
+  test("the harness loop reports a throwing query and runs the next") {
+    val err = new java.io.ByteArrayOutputStream
+    val out = Console.withErr(new java.io.PrintStream(err, true)) {
+      Harness.eachQuery(spark, "spec", Seq("q_scan_project", "q_tpch_q1")) {
+        (name, _) => if (name == "q_scan_project") sys.error("boom") else 7
+      }
+    }
+    assert(out.map(o => o.name -> o.result) ===
+      Seq("q_scan_project" -> None, "q_tpch_q1" -> Some(7)))
+    val lines = err.toString.linesIterator.toSeq
+    assert(lines === Seq("[spec] q_scan_project",
+      "[spec] q_scan_project failed: boom", "[spec] q_tpch_q1"))
+  }
+
+  test("the harness loop frees what a lifecycle query built: its temp " +
+      "dir and every persistent RDD") {
+    val dirsBefore = tmpDirs("graft-postings")
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val Seq(o) = Harness.eachQuery(spark, "spec", Seq("q_postings_search")) {
+      (_, build) => build(sf001).count()
+    }
+    assert(o.result.exists(_ > 0L), o.toString)
+    assert(tmpDirs("graft-postings") -- dirsBefore === Set.empty[String])
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(left.isEmpty, s"the loop left rdd ids $left")
+  }
+
+  test("the harness timer keeps the fastest successful run; -1 when " +
+      "every run fails") {
+    val silent = new java.io.PrintStream(new java.io.ByteArrayOutputStream)
+    var n = 0
+    val t = Console.withErr(silent)(Harness.minOfN(3, "spec", "range") {
+      n += 1
+      if (n == 2) sys.error("flaky") else spark.range(10).toDF()
+    })
+    assert(n === 3 && t >= 0.0)
+    assert(Console.withErr(silent)(Harness.minOfN(2, "spec", "bad")(
+      sys.error("down"))) === -1.0)
   }
 }

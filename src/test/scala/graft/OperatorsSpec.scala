@@ -585,8 +585,7 @@ class OperatorsSpec extends SparkTestBase {
     val counts = got.groupBy($"query_id").count().collect()
     assert(counts.forall(_.getLong(1) == 10))
     // codebooks persist and round-trip exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq")
-      .resolve("m").toString
+    val dir = tempDir("graft-pq").resolve("m").toString
     Ann.savePq(spark, pq, dir)
     val loaded = Ann.loadPq(spark, dir)
     assert(loaded.codebooks.flatten.flatten.toSeq ==

@@ -13,8 +13,7 @@ class PartitioningSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-hp-$tag")
-      .resolve("t").toString
+    tempDir(s"graft-hp-$tag").resolve("t").toString
 
   private def fsOf(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
@@ -144,8 +143,7 @@ class PartitioningSpec extends SparkTestBase {
   test("SQL PARTITIONED BY creates the layout through the catalog; " +
       "INSERT tokenizes; DELETE and time travel work on partitioned " +
       "tables; partition-column RENAME/DROP refuse") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-hp-cat").toString
+    val wh = tempDir("graft-hp-cat").toString
     val cat = "graft_hp"
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.v2.GraftCatalog")

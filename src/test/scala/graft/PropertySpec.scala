@@ -2,23 +2,19 @@ package graft
 
 import org.apache.spark.sql.{Column, SaveMode}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property-based contracts (SURVEY.md §5.3): pushdown never changes
   * results, limit composes as min, write-then-read round-trips.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkTestBase {
   /** Deterministic scalacheck sampling (scalatest-scalacheck bridge is
     * not on the offline classpath, so drive Gen directly). */
   private def forAllSeeded[T](gen: Gen[T], n: Int)(body: T => Unit): Unit =
     (0 until n).foreach { i =>
       body(gen.pureApply(Gen.Parameters.default, Seed(i.toLong)))
     }
-
-  lazy val spark = SparkTestBase.session
-  val sf001 = "/root/testdata/sf0.001"
 
   private val filterPool: Seq[(String, Column)] = Seq(
     ("qty<10", col("l_quantity") < 10),
@@ -59,8 +55,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("write-then-read round-trips (atomic parquet sink)") {
     val src = spark.read.parquet(s"$sf001/orders.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-prop")
-      .resolve("o").toString
+    val dir = tempDir("graft-prop").resolve("o").toString
     graft.sources.GraftSink.saveAtomic(src, dir, SaveMode.Overwrite)
     val back = spark.read.parquet(dir)
     assert(back.count() == src.count())
@@ -69,8 +64,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("compensating-commit sink round-trips values through parquet parts") {
     val src = spark.read.parquet(s"$sf001/customer.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-prop")
-      .resolve("c").toString
+    val dir = tempDir("graft-prop").resolve("c").toString
     graft.sources.GraftSink.saveCompensating(src, dir)
     val back = graft.sources.GraftSink.readCompensating(spark, dir)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)

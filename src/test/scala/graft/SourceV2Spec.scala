@@ -133,8 +133,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("end-to-end: fully-pushed disjunction over nullable column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-null")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-null").resolve("t").toString
     import spark.implicits._
     Seq[(java.lang.Integer, java.lang.Integer)](
       (5, 1), (5, 3), (null, 1), (null, 3), (4, 1))
@@ -170,8 +169,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("pushed filters prune row groups from footer statistics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-prune")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-prune").resolve("t").toString
     import spark.implicits._
     // 4 range-partitioned files -> disjoint id ranges per row group
     (0L until 4000L).toDF("id").withColumn("pad", col("id") * 2)
@@ -233,8 +231,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("top-k pushdown honors null ordering") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-topn")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-topn").resolve("t").toString
     import spark.implicits._
     Seq[(java.lang.Long, java.lang.Integer)](
       (1L, 5), (2L, null), (3L, 1), (4L, null), (5L, 9))
@@ -296,8 +293,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("runtime filters prune row groups at execution time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-dpp")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-dpp").resolve("t").toString
     import spark.implicits._
     (0L until 4000L).toDF("id").withColumn("v", col("id") * 3)
       .repartitionByRange(4, col("id")).write.parquet(dir)
@@ -321,8 +317,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("V2 write: append and truncate-overwrite through BatchWrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-write")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-write").resolve("t").toString
     val nation = spark.read.parquet(s"$sf001/nation.parquet")
     nation.write.parquet(dir) // seed the table
     // append through the staged-commit V2 write path
@@ -345,8 +340,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("V2 write: append rejects a mismatched schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-wmis")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-wmis").resolve("t").toString
     spark.read.parquet(s"$sf001/nation.parquet").write.parquet(dir)
     import spark.implicits._
     val e = intercept[Exception] {
@@ -357,8 +351,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("_file point/IN predicates prune the listing before footer work") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-fprune")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-fprune").resolve("t").toString
     import spark.implicits._
     (0 until 4).foreach { i =>
       spark.range(i * 100L, (i + 1) * 100L).toDF("id").coalesce(1)
@@ -398,8 +391,7 @@ class SourceV2Spec extends SparkTestBase {
   test("V2 write: a widened append records the schema marker " +
       "(visibility independent of file name order)") {
     import graft.sources.v2.GraftCatalog
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-widen")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-widen").resolve("t").toString
     import spark.implicits._
     // seed with a file whose name sorts FIRST ("part-0...") so the
     // footer-resolved schema would hide the widened column without
@@ -418,7 +410,7 @@ class SourceV2Spec extends SparkTestBase {
       s"marker after widened append: $marker")
     // ... and a catalog-style load sees w deterministically: rows from
     // the old file read NULL, the appended row carries its value
-    val wh = java.nio.file.Files.createTempDirectory("graft-widen-wh")
+    val wh = tempDir("graft-widen-wh")
     val cat = s"gw${java.util.UUID.randomUUID().toString.take(8)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.v2.GraftCatalog")
@@ -433,8 +425,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("filtered aggregates go footer-only when stats decide all groups") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-fagg")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-fagg").resolve("t").toString
     // four files with EXACT disjoint id ranges [0,999] ... [3000,3999]
     (0 until 4).foreach { i =>
       spark.range(i * 1000L, (i + 1) * 1000L).toDF("id")
@@ -460,8 +451,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("micro-batch stream tails a growing graft-v2 directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-stream")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-stream").resolve("t").toString
     import spark.implicits._
     spark.range(0, 100).toDF("id").coalesce(1).write.parquet(dir)
     val q = spark.readStream.format("graft-v2").option("path", dir).load()
@@ -496,7 +486,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("stream tail fails clearly on DML under it; ignoreFileChanges " +
       "opts into continuing") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-dmlst")
+    val base = tempDir("graft-v2-dmlst")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -553,7 +543,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("manifest-versioned stream tolerates DML between polls: " +
       "appends flow exactly-once, change commits are skipped") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-vstream")
+    val base = tempDir("graft-v2-vstream")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -614,7 +604,7 @@ class SourceV2Spec extends SparkTestBase {
   test("stream tail fails when a rewrite's archive copy was vacuumed " +
       "between polls") {
     import graft.sources.v2.GraftManifest
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-dmlvac")
+    val base = tempDir("graft-v2-dmlvac")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -655,8 +645,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("_pos metadata column serves physical ordinals (row mode, " +
       "exact under vectors)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-pos")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-pos").resolve("t").toString
     import spark.implicits._
     spark.range(0, 100).toDF("id").coalesce(1).write.parquet(dir)
     val t = spark.read.format("graft-v2").option("path", dir).load()
@@ -679,7 +668,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("stream applies a pre-existing deletion vector at delivery") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-dvst")
+    val base = tempDir("graft-v2-dvst")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -703,7 +692,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("stream restart from checkpoint never re-reads committed files") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-restart")
+    val base = tempDir("graft-v2-restart")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -730,7 +719,7 @@ class SourceV2Spec extends SparkTestBase {
   }
 
   test("stream restart after compaction (> CompactInterval batches)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-compact")
+    val base = tempDir("graft-v2-compact")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -778,7 +767,7 @@ class SourceV2Spec extends SparkTestBase {
     // the source contract is append-only, but a retention job deleting
     // old files must not kill the stream: committed files never
     // replan, and the footer cache tolerates missing paths
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-del")
+    val base = tempDir("graft-v2-del")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -802,8 +791,7 @@ class SourceV2Spec extends SparkTestBase {
   test("footer aggregates normalize timestamp units and decline on NaN") {
     import spark.implicits._
     // MILLIS-unit file: footer stats are millis, readers emit micros
-    val mdir = java.nio.file.Files.createTempDirectory("graft-v2-ts")
-      .resolve("t").toString
+    val mdir = tempDir("graft-v2-ts").resolve("t").toString
     val prevTs = spark.conf.get("spark.sql.parquet.outputTimestampType")
     try {
       spark.conf.set("spark.sql.parquet.outputTimestampType",
@@ -843,8 +831,7 @@ class SourceV2Spec extends SparkTestBase {
       java.sql.Timestamp.valueOf("2024-06-30 23:59:59"))
 
     // NaN: parquet-mr drops the double min/max stats -> must decline
-    val ndir = java.nio.file.Files.createTempDirectory("graft-v2-nan")
-      .resolve("t").toString
+    val ndir = tempDir("graft-v2-nan").resolve("t").toString
     Seq(1.0, Double.NaN, 5.0).toDF("d").coalesce(1).write.parquet(ndir)
     val nagg = spark.read.format("graft-v2").option("path", ndir).load()
       .agg(max(col("d")).as("m"))
@@ -878,8 +865,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("multi-file directory: one partition per row group") {
     val src = Tables.t(spark, sf001, "orders")
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-dir")
-      .resolve("multi").toString
+    val dir = tempDir("graft-v2-dir").resolve("multi").toString
     src.repartition(3).write.parquet(dir)
     val df = spark.read.format("graft-v2").option("path", dir).load()
     assert(df.rdd.getNumPartitions >= 3)
@@ -888,8 +874,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("COUNT(*) pushes down on a DV-masked table (footer rows minus " +
       "mask cardinality); anything else still declines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-dvcnt")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-dvcnt").resolve("t").toString
     import spark.implicits._
     spark.range(0, 1000).toDF("id").withColumn("v", col("id") * 2)
       .coalesce(2).write.parquet(dir)
@@ -921,8 +906,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("COUNT(*) on a DV-masked table still pushes under a filter that " +
       "decides every file at file granularity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-dvcntf")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-dvcntf").resolve("t").toString
     import spark.implicits._
     // two files with disjoint id ranges so a range filter can decide
     // each file wholesale
@@ -958,7 +942,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("maxFilesPerTrigger splits a file-log backlog into capped " +
       "micro-batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-adm")
+    val base = tempDir("graft-v2-adm")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -987,7 +971,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("maxFilesPerTrigger walks a manifest backlog version by " +
       "version") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-admv")
+    val base = tempDir("graft-v2-admv")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -1021,7 +1005,7 @@ class SourceV2Spec extends SparkTestBase {
 
   test("Trigger.AvailableNow drains the backlog in capped batches, " +
       "stops, and a later run picks up only what arrived since") {
-    val base = java.nio.file.Files.createTempDirectory("graft-v2-anow")
+    val base = tempDir("graft-v2-anow")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -1065,8 +1049,7 @@ class SourceV2Spec extends SparkTestBase {
   test("profileFromStats: zero-scan profile matches the data, " +
       "string bounds flagged inexact, DV tables decline") {
     import graft.operators.Profile
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-pfs")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-pfs").resolve("t").toString
     import spark.implicits._
     val batch1 = Seq[(java.lang.Long, java.lang.Double, String)](
       (3L, 1.5, "pear"), (1L, 9.25, "apple"), (2L, null, "fig"))

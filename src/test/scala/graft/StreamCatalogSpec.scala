@@ -13,8 +13,7 @@ class StreamCatalogSpec extends SparkTestBase {
   import spark.implicits._
 
   private def withCatalog[A](f: String => A): A = {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-streamcat-wh").toString
+    val wh = tempDir("graft-streamcat-wh").toString
     spark.conf.set("spark.sql.catalog.gsc", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gsc.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gsc.s")
@@ -28,8 +27,7 @@ class StreamCatalogSpec extends SparkTestBase {
       spark.sql("CREATE TABLE gsc.s.t (id BIGINT) USING `graft-v2`")
       spark.sql(
         "ALTER TABLE gsc.s.t ADD CONSTRAINT id_pos CHECK (id > 0)")
-      val cp = java.nio.file.Files
-        .createTempDirectory("graft-streamcat-cp").toString
+      val cp = tempDir("graft-streamcat-cp").toString
       val input = MemoryStream[Long]
       val q = input.toDF().toDF("id")
         .writeStream.outputMode("append")
@@ -58,8 +56,7 @@ class StreamCatalogSpec extends SparkTestBase {
 
   test("auto-compact: small batch appends collapse once the file " +
       "count crosses the threshold; rows and history survive") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-autocompact").toString
+    val dir = tempDir("graft-autocompact").toString
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       graft.sources.v2.GraftHadoopConf.sessionConf())
     def dataFiles: Int = fs.listStatus(
@@ -87,10 +84,8 @@ class StreamCatalogSpec extends SparkTestBase {
 
   test("auto-compact keeps a streaming table's file count bounded") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-autocompact-stream").toString
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft-autocompact-stream-cp").toString
+    val dir = tempDir("graft-autocompact-stream").toString
+    val cp = tempDir("graft-autocompact-stream-cp").toString
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       graft.sources.v2.GraftHadoopConf.sessionConf())
     try {
@@ -120,8 +115,7 @@ class StreamCatalogSpec extends SparkTestBase {
     withCatalog { _ =>
       spark.sql("CREATE TABLE gsc.s.g (a BIGINT, b BIGINT, " +
         "c BIGINT GENERATED ALWAYS AS (a * 2 + b)) USING `graft-v2`")
-      val cp = java.nio.file.Files
-        .createTempDirectory("graft-streamcat-gen").toString
+      val cp = tempDir("graft-streamcat-gen").toString
       val input = MemoryStream[(Long, Long)]
       // the stream ships the NULL placeholder; the sink's gen guard
       // fills it per row before the epoch commits
@@ -142,8 +136,7 @@ class StreamCatalogSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     withCatalog { _ =>
       spark.sql("CREATE TABLE gsc.s.u (id BIGINT) USING `graft-v2`")
-      val cp = java.nio.file.Files
-        .createTempDirectory("graft-streamcat-cp2").toString
+      val cp = tempDir("graft-streamcat-cp2").toString
       val input = MemoryStream[Long]
       val q1 = input.toDF().toDF("id")
         .writeStream.option("checkpointLocation", cp).toTable("gsc.s.u")

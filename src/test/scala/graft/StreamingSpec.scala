@@ -965,8 +965,7 @@ class StreamingSpec extends SparkTestBase {
   test("tailTrendingExact: bounded MG state + table-slice refinement " +
       "emit EXACT per-window top-k even when the counters undercount; " +
       "replays land nothing twice") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-trend-exact")
+    val base = tempDir("graft-trend-exact")
     val corpus = base.resolve("corpus").toString
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -1048,8 +1047,7 @@ class StreamingSpec extends SparkTestBase {
   test("exactTrendingBatch: an understated candidate set cannot fake " +
       "a proof — the admission bound routes the window to the exact " +
       "fallback") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-trend-unit")
+    val base = tempDir("graft-trend-unit")
     val corpus = base.resolve("corpus").toString
     Seq((ts(1), "top top top top mid mid low other1 other2"))
       .toDF("ts", "text").write.format("graft-v2")
@@ -1129,8 +1127,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamOps
     val input = MemoryStream[Long]
-    val dir = java.nio.file.Files.createTempDirectory("graft-appstream")
-      .resolve("t").toString
+    val dir = tempDir("graft-appstream").resolve("t").toString
     import spark.implicits._
     val q = StreamOps.writeAppendBatches(
       input.toDF().select($"value".as("id")).coalesce(2), dir,
@@ -1159,8 +1156,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamOps
     val input = MemoryStream[Long]
-    val dir = java.nio.file.Files.createTempDirectory("graft-appstream-c")
-      .resolve("t").toString
+    val dir = tempDir("graft-appstream-c").resolve("t").toString
     import spark.implicits._
     // no cadence trigger — only the small-file-count one (threshold 4)
     val q = StreamOps.writeAppendBatches(
@@ -1188,7 +1184,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamOps
     val input = MemoryStream[Long]
-    val base = java.nio.file.Files.createTempDirectory("graft-eos")
+    val base = tempDir("graft-eos")
     val dir = base.resolve("t").toString
     val ckpt = base.resolve("ckpt").toString
     import spark.implicits._
@@ -1229,8 +1225,7 @@ class StreamingSpec extends SparkTestBase {
   test("foreachBatch atomic sink lands every micro-batch completely") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[E]
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink-stream")
-      .toString
+    val dir = tempDir("graft-sink-stream").toString
     val q = StreamOps.writeAtomicBatches(input.toDF(), dir)
     try {
       input.addData(E(1, ts(1), 1, "a", 1.0), E(2, ts(2), 1, "b", 2.0))
@@ -1283,8 +1278,7 @@ class StreamingSpec extends SparkTestBase {
     // + checkpoint restarts is the supported pattern — timeouts fire on
     // each restart's batches.
     val input = MemoryStream[StreamingDedup.DocIn]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ttl-ckpt").toString
+    val ckpt = tempDir("graft-ttl-ckpt").toString
     val pairs =
       new java.util.concurrent.ConcurrentLinkedQueue[StreamingDedup.DupPair]()
     def runOnce(): Unit = {
@@ -1332,8 +1326,7 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set("graft.streaming.dedup.idleTimeoutMs", "500")
     try {
       val input = MemoryStream[StreamingDedup.DocIn]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-ttl-default-ckpt").toString
+      val ckpt = tempDir("graft-ttl-default-ckpt").toString
       val pairs = new java.util.concurrent.ConcurrentLinkedQueue[
         StreamingDedup.DupPair]()
       def runOnce(): Unit = {
@@ -1503,10 +1496,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("graft-v2 native streaming sink appends micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-v2").toString
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft-stream-v2-cp").toString
+    val dir = tempDir("graft-stream-v2").toString
+    val cp = tempDir("graft-stream-v2-cp").toString
     val input = MemoryStream[Long]
     val q = input.toDF().toDF("id")
       .writeStream.outputMode("append")
@@ -1531,8 +1522,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("graft-v2 streaming sink: epoch replay is exactly-once") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-replay").toString
+    val dir = tempDir("graft-stream-replay").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))

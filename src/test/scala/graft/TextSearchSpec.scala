@@ -55,8 +55,7 @@ class TextSearchSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
     // full build
-    val full = java.nio.file.Files.createTempDirectory("graft-pidx")
-      .resolve("full").toString
+    val full = tempDir("graft-pidx").resolve("full").toString
     TextSearch.buildPostings(docs, full)
     val fromIdx = TextSearch.bm25FromIndex(spark, full, q, k = 25)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -64,8 +63,7 @@ class TextSearchSpec extends SparkTestBase {
 
     // build 2/3 + extend 1/3 == full build (same search output, and
     // the postings contents themselves are identical)
-    val inc = java.nio.file.Files.createTempDirectory("graft-pidx")
-      .resolve("inc").toString
+    val inc = tempDir("graft-pidx").resolve("inc").toString
     TextSearch.buildPostings(docs.filter($"doc_id" % 3 =!= 0), inc)
     TextSearch.extendPostings(docs.filter($"doc_id" % 3 === 0), inc)
     val fromInc = TextSearch.bm25FromIndex(spark, inc, q, k = 25)
@@ -96,10 +94,8 @@ class TextSearchSpec extends SparkTestBase {
     import graft.operators.TextSearch
     val docs = Tables.t(spark, sf001, "documents")
       .select($"doc_id", $"text")
-    val corpus = java.nio.file.Files.createTempDirectory("graft-pfeed")
-      .resolve("corpus").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft-pfeed")
-      .resolve("idx").toString
+    val corpus = tempDir("graft-pfeed").resolve("corpus").toString
+    val idx = tempDir("graft-pfeed").resolve("idx").toString
     val q = "hash join stream"
     docs.filter($"doc_id" % 3 =!= 0).write.format("graft-v2")
       .option("path", corpus).mode("append").save()
@@ -141,7 +137,7 @@ class TextSearchSpec extends SparkTestBase {
     import graft.operators.TextSearch
     val docs = Tables.t(spark, sf001, "documents")
       .select($"doc_id", $"text")
-    val base = java.nio.file.Files.createTempDirectory("graft-ptail")
+    val base = tempDir("graft-ptail")
     val corpus = base.resolve("corpus").toString
     val idx = base.resolve("idx").toString
     val ckpt = base.resolve("ckpt").toString
@@ -216,7 +212,7 @@ class TextSearchSpec extends SparkTestBase {
     import graft.operators.TextSearch
     val docs = Tables.t(spark, sf001, "documents")
       .select($"doc_id", $"text")
-    val base = java.nio.file.Files.createTempDirectory("graft-pexact")
+    val base = tempDir("graft-pexact")
     val corpus = base.resolve("corpus").toString
     val idx = base.resolve("idx").toString
     docs.filter($"doc_id" % 3 === 0).write.format("graft-v2")

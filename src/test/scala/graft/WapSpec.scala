@@ -12,8 +12,7 @@ class WapSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshTable(name: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-wap-$name").toString
+    val dir = tempDir(s"graft-wap-$name").toString
     s"$dir/t"
   }
 
@@ -86,8 +85,7 @@ class WapSpec extends SparkTestBase {
 
   test("CALL graft.system.wap_publish / wap_abort drive the same " +
       "lifecycle from SQL") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-wap-sql").toString
+    val wh = tempDir("graft-wap-sql").toString
     spark.conf.set("spark.sql.catalog.graftwap",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftwap.warehouse", wh)

@@ -36,8 +36,7 @@ class MvSqlSpec extends SparkTestBase {
 
   test("CREATE / REFRESH / DROP MATERIALIZED VIEW round-trip " +
       "(aggregate, delta refresh)") { inSession {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-mvsql").toString
+    val wh = tempDir("graft-mvsql").toString
     ext.conf.set("spark.sql.catalog.mvc",
       "graft.sources.v2.GraftCatalog")
     ext.conf.set("spark.sql.catalog.mvc.warehouse", wh)
@@ -84,8 +83,7 @@ class MvSqlSpec extends SparkTestBase {
 
   test("projection MV via SQL with WHERE; plain SQL still delegates") {
     inSession {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft-mvsql2").toString
+      val wh = tempDir("graft-mvsql2").toString
       ext.conf.set("spark.sql.catalog.mvp",
         "graft.sources.v2.GraftCatalog")
       ext.conf.set("spark.sql.catalog.mvp.warehouse", wh)
@@ -132,8 +130,7 @@ class MvSqlSpec extends SparkTestBase {
   }}
 
   test("CREATE TABLE CLONE and RESTORE TABLE SQL faces") { inSession {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-clonesql").toString
+    val wh = tempDir("graft-clonesql").toString
     ext.conf.set("spark.sql.catalog.csq",
       "graft.sources.v2.GraftCatalog")
     ext.conf.set("spark.sql.catalog.csq.warehouse", wh)
@@ -167,8 +164,7 @@ class MvSqlSpec extends SparkTestBase {
   }}
 
   test("VACUUM and DESCRIBE HISTORY SQL faces") { inSession {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-vacsql").toString
+    val wh = tempDir("graft-vacsql").toString
     ext.conf.set("spark.sql.catalog.vsq",
       "graft.sources.v2.GraftCatalog")
     ext.conf.set("spark.sql.catalog.vsq.warehouse", wh)
@@ -206,8 +202,7 @@ class MvSqlSpec extends SparkTestBase {
   }}
 
   test("OPTIMIZE SQL face: compaction and ZORDER BY") { inSession {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-optsql").toString
+    val wh = tempDir("graft-optsql").toString
     ext.conf.set("spark.sql.catalog.osq",
       "graft.sources.v2.GraftCatalog")
     ext.conf.set("spark.sql.catalog.osq.warehouse", wh)
@@ -231,8 +226,7 @@ class MvSqlSpec extends SparkTestBase {
 
   test("DESCRIBE DETAIL / CALL detail: one-row operational summary") {
     inSession {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft-dtlsql").toString
+      val wh = tempDir("graft-dtlsql").toString
       ext.conf.set("spark.sql.catalog.dsq",
         "graft.sources.v2.GraftCatalog")
       ext.conf.set("spark.sql.catalog.dsq.warehouse", wh)

@@ -11,7 +11,7 @@ import graft.SparkTestBase
 class BloomIndexSpec extends SparkTestBase {
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-bloom-$tag").toString
+    tempDir(s"graft-bloom-$tag").toString
 
   /** Three appends = three data files; the indexed key `k` INTERLEAVES
     * lexicographically across files (every file spans ~the whole key

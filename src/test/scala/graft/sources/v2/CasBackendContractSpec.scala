@@ -30,8 +30,7 @@ class CasBackendContractSpec extends SparkTestBase {
     Seq(
       ("in-memory", () => (new InMemoryCasBackend, () => ())),
       ("file", () => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-cas-contract").toFile
+        val dir = tempDir("graft-cas-contract").toFile
         (new FileCasBackend(dir), () => ())
       }),
       ("tcp", () => {
@@ -40,8 +39,7 @@ class CasBackendContractSpec extends SparkTestBase {
           () => server.close())
       }),
       ("tcp-wal", () => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-cas-contract-wal")
+        val dir = tempDir("graft-cas-contract-wal")
         val server = new CasServer(walPath = Some(dir.resolve("wal")))
         (new TcpCasBackend("127.0.0.1", server.port),
           () => server.close())
@@ -56,8 +54,7 @@ class CasBackendContractSpec extends SparkTestBase {
       // cross-process variant (link(2) conditional create, file-lock
       // compare-and-touch) that the two-JVM race test drives
       ("s3-file", () => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-cas-s3file").toFile
+        val dir = tempDir("graft-cas-s3file").toFile
         (new S3CasBackend(new FileSimulatedS3Store(dir)), () => ())
       }))
 
@@ -163,8 +160,7 @@ class CasBackendContractSpec extends SparkTestBase {
       "exactly one winner per slot") {
     eachBackend { b =>
       val store = new ExternalCasCommit(b)
-      val dir = new Path(java.nio.file.Files
-        .createTempDirectory("graft-cas-publish").toString)
+      val dir = new Path(tempDir("graft-cas-publish").toString)
       val fs = dir.getFileSystem(
         spark.sessionState.newHadoopConf())
       val dst = new Path(dir, "v0000000001.txt")

@@ -96,8 +96,7 @@ class CasServiceSpec extends SparkTestBase {
       // same (mutable) conf object or later conf edits go unseen
       val c = spark.sparkContext.hadoopConfiguration
       c.set("fs.objstore2.impl", classOf[ObjStore2FileSystem].getName)
-      val local = java.nio.file.Files
-        .createTempDirectory("graft-tcp-race").toString
+      val local = tempDir("graft-tcp-race").toString
       val table = new Path(s"objstore2:$local/t")
       val fs = table.getFileSystem(c)
       val mdir = new Path(table, GraftManifest.Dir)
@@ -141,8 +140,7 @@ class CasServiceSpec extends SparkTestBase {
     withServer { (_, backend) =>
       val c = spark.sparkContext.hadoopConfiguration
       c.set("fs.objstore2.impl", classOf[ObjStore2FileSystem].getName)
-      val local = java.nio.file.Files
-        .createTempDirectory("graft-tcp-recover").toString
+      val local = tempDir("graft-tcp-recover").toString
       val table = new Path(s"objstore2:$local/t")
       val fs = table.getFileSystem(c)
       val mdir = new Path(table, GraftManifest.Dir)
@@ -171,8 +169,7 @@ class CasServiceSpec extends SparkTestBase {
       hc.set("graft.commit.store.objstore2", "tcp-cas")
       hc.set("graft.commit.cas.endpoint", s"127.0.0.1:${server.port}")
       try {
-        val local = java.nio.file.Files
-          .createTempDirectory("graft-tcp-e2e").toString
+        val local = tempDir("graft-tcp-e2e").toString
         val cat = "graft_tcpcas"
         spark.conf.set(s"spark.sql.catalog.$cat",
           "graft.sources.v2.GraftCatalog")
@@ -209,8 +206,7 @@ class CasServiceSpec extends SparkTestBase {
       hc.set("graft.commit.store.objstore2", "tcp-cas")
       hc.set("graft.commit.cas.endpoint", s"127.0.0.1:${server.port}")
       try {
-        val local = java.nio.file.Files
-          .createTempDirectory("graft-tcp-2jvm").resolve("t").toString
+        val local = tempDir("graft-tcp-2jvm").resolve("t").toString
         val dir = s"objstore2:$local"
         val table = new Path(dir)
         val fs = table.getFileSystem(hc)
@@ -260,14 +256,12 @@ class CasServiceSpec extends SparkTestBase {
     // create + file-lock compare-and-touch make the same five calls
     // cross-process atomic
     val hc = spark.sparkContext.hadoopConfiguration
-    val casDir = java.nio.file.Files
-      .createTempDirectory("graft-s3sim-cas").toString
+    val casDir = tempDir("graft-s3sim-cas").toString
     hc.set("fs.objstore2.impl", classOf[ObjStore2FileSystem].getName)
     hc.set("graft.commit.store.objstore2", "s3-sim")
     hc.set("graft.commit.cas.dir", casDir)
     try {
-      val local = java.nio.file.Files
-        .createTempDirectory("graft-s3sim-2jvm").resolve("t").toString
+      val local = tempDir("graft-s3sim-2jvm").resolve("t").toString
       val dir = s"objstore2:$local"
       val table = new Path(dir)
       val fs = table.getFileSystem(hc)
@@ -312,8 +306,7 @@ class CasServiceSpec extends SparkTestBase {
 
   test("durable WAL: acknowledged claims survive a kill/restart, a " +
       "torn tail is dropped, and the log compacts to the live state") {
-    val wal = java.nio.file.Files
-      .createTempDirectory("graft-cas-wal").resolve("cas.wal")
+    val wal = tempDir("graft-cas-wal").resolve("cas.wal")
     val s1 = new CasServer(0, Some(wal))
     try {
       val c = new TcpCasBackend("127.0.0.1", s1.port)
@@ -348,8 +341,7 @@ class CasServiceSpec extends SparkTestBase {
   test("WAL torn tail that still PARSES is rejected by the record " +
       "checksum: a truncated delete must not replay as a delete of " +
       "a different live key") {
-    val wal = java.nio.file.Files
-      .createTempDirectory("graft-cas-wal3").resolve("cas.wal")
+    val wal = tempDir("graft-cas-wal3").resolve("cas.wal")
     val s1 = new CasServer(0, Some(wal))
     try {
       val c = new TcpCasBackend("127.0.0.1", s1.port)
@@ -381,12 +373,10 @@ class CasServiceSpec extends SparkTestBase {
 
   test("coordinator kill/restart mid-commit-stream: in-flight claim " +
       "survives, no double-won slot, e2e append/DELETE still green") {
-    val wal = java.nio.file.Files
-      .createTempDirectory("graft-cas-wal2").resolve("cas.wal")
+    val wal = tempDir("graft-cas-wal2").resolve("cas.wal")
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.objstore2.impl", classOf[ObjStore2FileSystem].getName)
-    val local = java.nio.file.Files
-      .createTempDirectory("graft-cas-restart").toString
+    val local = tempDir("graft-cas-restart").toString
     val table = new Path(s"objstore2:$local/t")
     val fs = table.getFileSystem(hc)
     val mdir = new Path(table, GraftManifest.Dir)

@@ -17,8 +17,7 @@ class CdfSpec extends SparkTestBase {
   import org.apache.spark.sql.SparkSession
 
   private def setup(tag: String): (String, String) = {
-    val wh = java.nio.file.Files
-      .createTempDirectory(s"graft-cdf-$tag").toString
+    val wh = tempDir(s"graft-cdf-$tag").toString
     val cat = s"graft_cdf_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.v2.GraftCatalog")
@@ -580,8 +579,7 @@ class CdfSpec extends SparkTestBase {
     // 4 versions of backlog before the stream starts
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cdf-adm-ck").toString
+    val ckpt = tempDir("graft-cdf-adm-ck").toString
     val q = spark.readStream.format("graft-v2").option("path", p)
       .option("readChangeFeed", "true")
       .option("maxVersionsPerTrigger", "1").load()
@@ -614,8 +612,7 @@ class CdfSpec extends SparkTestBase {
     }
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cdf-anow-ck").toString
+    val ckpt = tempDir("graft-cdf-anow-ck").toString
     def runOnce(): Unit = {
       val q = spark.readStream.format("graft-v2").option("path", p)
         .option("readChangeFeed", "true")

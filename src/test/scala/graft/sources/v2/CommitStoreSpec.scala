@@ -36,8 +36,7 @@ class CommitStoreSpec extends SparkTestBase {
   }
 
   private def newTable(tag: String): (FileSystem, Path) = {
-    val local = java.nio.file.Files
-      .createTempDirectory(s"graft-objstore-$tag").toString
+    val local = tempDir(s"graft-objstore-$tag").toString
     val table = new Path(s"objstore:$local/t")
     val fs = table.getFileSystem(hadoopConf())
     fs.mkdirs(table)
@@ -67,8 +66,7 @@ class CommitStoreSpec extends SparkTestBase {
   }
 
   test("file CAS backend: N threads, exactly one winner per key") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cas").toFile
+    val dir = tempDir("graft-cas").toFile
     val backend = new FileCasBackend(dir)
     val n = 16
     val pool = Executors.newFixedThreadPool(n)
@@ -246,8 +244,7 @@ class CommitStoreSpec extends SparkTestBase {
 
   test("FileCasBackend: a claim deleted mid-read never yields a " +
       "spurious win — the retry loop links or reads, only") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cas-race").toFile
+    val dir = tempDir("graft-cas-race").toFile
     val deletions = new java.util.concurrent.atomic.AtomicInteger(0)
     val backend = new FileCasBackend(dir) {
       override protected[v2] def onLinkLost(): Unit = {
@@ -333,8 +330,7 @@ class CommitStoreSpec extends SparkTestBase {
 
   test("CommitStores: a defaulted 'auto' on an object-store scheme " +
       "fails fast; an explicit 'auto' is honored") {
-    val local = java.nio.file.Files
-      .createTempDirectory("graft-s3-default").toString
+    val local = tempDir("graft-s3-default").toString
     val c = hadoopConf()
     c.set("fs.s3a.impl", classOf[ObjStoreFileSystem].getName)
     // no graft.commit.store conf at all → the default must refuse to
@@ -359,10 +355,8 @@ class CommitStoreSpec extends SparkTestBase {
 
   test("end-to-end on the object store: append, DELETE, time travel " +
       "through the external commit service") {
-    val local = java.nio.file.Files
-      .createTempDirectory("graft-objstore-e2e").toString
-    val casDir = java.nio.file.Files
-      .createTempDirectory("graft-objstore-cas").toString
+    val local = tempDir("graft-objstore-e2e").toString
+    val casDir = tempDir("graft-objstore-cas").toString
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.objstore.impl", classOf[ObjStoreFileSystem].getName)
     // scheme-scoped: file:// tables in other suites keep hard links
@@ -401,8 +395,7 @@ class CommitStoreSpec extends SparkTestBase {
 
   test("cloneAcross copies a table to a DIFFERENT filesystem on " +
       "executors; the clone's lifecycle is independent") {
-    val local = java.nio.file.Files
-      .createTempDirectory("graft-xfs-clone").toString
+    val local = tempDir("graft-xfs-clone").toString
     spark.sparkContext.hadoopConfiguration.set("fs.objstore.impl",
       classOf[ObjStoreFileSystem].getName)
     import spark.implicits._

@@ -11,7 +11,7 @@ import graft.SparkTestBase
 class GraftMvSpec extends SparkTestBase {
 
   private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-mv-$tag").toString
+    tempDir(s"graft-mv-$tag").toString
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

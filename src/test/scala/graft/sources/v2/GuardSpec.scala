@@ -16,7 +16,7 @@ import graft.SparkTestBase
 class GuardSpec extends SparkTestBase {
 
   private def tmpTable(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+    tempDir(prefix).resolve("t").toString
 
   private def hconf = spark.sessionState.newHadoopConf()
 
@@ -29,8 +29,7 @@ class GuardSpec extends SparkTestBase {
   /** One staged single-part parquet file holding `df`'s rows, outside
     * the table dir — a hand-rolled delta-commit insert message. */
   private def stageParquet(df: org.apache.spark.sql.DataFrame): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-staged")
-      .resolve("p").toString
+    val d = tempDir("graft-staged").resolve("p").toString
     df.coalesce(1).write.parquet(d)
     new java.io.File(d).listFiles()
       .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
@@ -110,8 +109,7 @@ class GuardSpec extends SparkTestBase {
 
   test("widened APPEND refuses a dropped column's reserved name") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-wapp")
-      .toString
+    val wh = tempDir("graft-wapp").toString
     spark.conf.set("spark.sql.catalog.gwapp",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gwapp.warehouse", wh)
@@ -143,8 +141,7 @@ class GuardSpec extends SparkTestBase {
     import graft.sources.GraftSink
     import org.apache.spark.sql.SaveMode
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-posmerge")
-      .toString
+    val wh = tempDir("graft-posmerge").toString
     spark.conf.set("spark.sql.catalog.gpos",
       "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gpos.warehouse", wh)

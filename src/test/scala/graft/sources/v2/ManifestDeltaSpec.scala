@@ -14,7 +14,7 @@ class ManifestDeltaSpec extends SparkTestBase {
 
   private def newTable(): (Path, org.apache.hadoop.fs.FileSystem) = {
     val dir = new Path(
-      java.nio.file.Files.createTempDirectory("graft-mdelta").toString,
+      tempDir("graft-mdelta").toString,
       "t")
     val fs = dir.getFileSystem(new Configuration())
     fs.mkdirs(dir)

@@ -13,8 +13,7 @@ class SkipStatsSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-skip-$tag")
-      .resolve("t").toString
+    tempDir(s"graft-skip-$tag").resolve("t").toString
 
   private def fsOf(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
@@ -167,8 +166,7 @@ class SkipStatsSpec extends SparkTestBase {
   }
 
   test("t.files surfaces the recorded skip ranges") {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-skip-meta").toString
+    val wh = tempDir("graft-skip-meta").toString
     val cat = "graft_skipmeta"
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.v2.GraftCatalog")
@@ -221,8 +219,7 @@ class SkipStatsSpec extends SparkTestBase {
     // still normalize its footer stats into the same micros domain
     val key = "spark.sql.parquet.outputTimestampType"
     val saved = spark.conf.get(key)
-    val fdir = java.nio.file.Files
-      .createTempDirectory("graft-skip-mixed").toString
+    val fdir = tempDir("graft-skip-mixed").toString
     try {
       spark.conf.set(key, "TIMESTAMP_MILLIS")
       rows(1 to 10).repartition(1).write.parquet(s"$fdir/ms")

@@ -13,7 +13,7 @@ import graft.SparkTestBase
 class V2InternalsSpec extends SparkTestBase {
 
   private def newLogDir(): Path = new Path(
-    java.nio.file.Files.createTempDirectory("graft-filelog").toString, "log")
+    tempDir("graft-filelog").toString, "log")
 
   test("file log: compaction bounds the directory and survives reopen") {
     val dir = newLogDir()
@@ -102,8 +102,7 @@ class V2InternalsSpec extends SparkTestBase {
   }
 
   test("truncate commit: rename failure mid-commit restores old parts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-v2-trunc")
-      .resolve("t").toString
+    val dir = tempDir("graft-v2-trunc").resolve("t").toString
     val nation = spark.read.parquet(s"$sf001/nation.parquet")
     nation.write.parquet(dir)
     val target = new Path(dir)
@@ -143,8 +142,7 @@ class V2InternalsSpec extends SparkTestBase {
     // rewrite victimizing) that SAME file, computed against the
     // pre-B masks. Retrying would lose B's deleted positions — the
     // dv-stability guard must make A abort as a real conflict.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dvrace")
-      .resolve("t").toString
+    val dir = tempDir("graft-dvrace").resolve("t").toString
     import spark.implicits._
     spark.range(0, 100).toDF("id").coalesce(1).write.parquet(dir)
     val target = new Path(dir)
@@ -181,8 +179,7 @@ class V2InternalsSpec extends SparkTestBase {
     // must be contiguous and hold every winner's name exactly once —
     // under the old exists-check+rename (local rename(2) OVERWRITES),
     // a race could clobber a committed version and lose its names.
-    val dir = java.nio.file.Files.createTempDirectory("graft-race")
-      .resolve("t").toString
+    val dir = tempDir("graft-race").resolve("t").toString
     val table = new Path(dir)
     val fs = table.getFileSystem(new Configuration())
     fs.mkdirs(table)
