@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,8 +200,23 @@ object ScaleProbe {
     // copy (Tables.t converts to micros downstream either way)
     val spark =
       Harness.session("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    // the probes' temp dirs, deleted after the last probe (not through
+    // Materialize.tempDir: the loop's per-query release would delete
+    // the inflated copy mid-sweep)
+    val made = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try {
+      probe(spark, factor, names, base, { prefix =>
+        val d = Files.createTempDirectory(prefix)
+        made += d
+        d
+      })
+    } finally made.foreach(d => FileUtils.deleteQuietly(d.toFile))
+    spark.stop()
+  }
 
-    val scaled = Files.createTempDirectory("graft-scale").toString
+  private def probe(spark: SparkSession, factor: Int, names: Seq[String],
+      base: String, tempDir: String => Path): Unit = {
+    val scaled = tempDir("graft-scale").toString
     inflate(spark, base, scaled, factor)
     Harness.setUp(spark, base, scaled)
 
@@ -224,7 +240,7 @@ object ScaleProbe {
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     def bucketedProbe(dir: String, label: String): (Double, Boolean) = {
-      val wh = Files.createTempDirectory("graft-scale-bk").toString
+      val wh = tempDir("graft-scale-bk").toString
       spark.conf.set(s"spark.sql.catalog.bk$label",
         "graft.sources.v2.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.bk$label.warehouse", wh)
@@ -259,7 +275,7 @@ object ScaleProbe {
     // not the row count. Ratio ~1 across the Nx data inflation is the
     // 100 TB claim: retention deletes don't read the table.
     def deleteProbe(dir: String, label: String): (Double, Long) = {
-      val wh = Files.createTempDirectory("graft-scale-del").toString
+      val wh = tempDir("graft-scale-del").toString
       spark.conf.set(s"spark.sql.catalog.del$label",
         "graft.sources.v2.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.del$label.warehouse", wh)
@@ -290,7 +306,7 @@ object ScaleProbe {
     locally {
       import graft.sources.GraftSink
       import org.apache.spark.sql.SaveMode
-      val wh = Files.createTempDirectory("graft-scale-mr").toString
+      val wh = tempDir("graft-scale-mr").toString
       spark.conf.set("spark.sql.catalog.mrcat",
         "graft.sources.v2.GraftCatalog")
       spark.conf.set("spark.sql.catalog.mrcat.warehouse", wh)
@@ -333,7 +349,7 @@ object ScaleProbe {
     // tracks deleted rows, not touched-file bytes.
     def dvProbe(dir: String, label: String, maxFrac: String)
         : (Double, Long, Long, String) = {
-      val wh = Files.createTempDirectory("graft-scale-dv").toString
+      val wh = tempDir("graft-scale-dv").toString
       spark.conf.set(s"spark.sql.catalog.dv$label",
         "graft.sources.v2.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.dv$label.warehouse", wh)
@@ -403,7 +419,7 @@ object ScaleProbe {
     // lets SupportsDelta scans keep batch-decode speed. Plus the
     // end-to-end bulk UPDATE itself (vector + insert commit).
     locally {
-      val wh = Files.createTempDirectory("graft-scale-du").toString
+      val wh = tempDir("graft-scale-du").toString
       spark.conf.set("spark.sql.catalog.dup",
         "graft.sources.v2.GraftCatalog")
       spark.conf.set("spark.sql.catalog.dup.warehouse", wh)
@@ -437,7 +453,7 @@ object ScaleProbe {
     // l_partkey), row-group pruning works on BOTH keys — the
     // second-key file skipping a single sort column cannot give
     locally {
-      val dir = Files.createTempDirectory("graft-scale-z")
+      val dir = tempDir("graft-scale-z")
         .resolve("t").toString
       Tables.t(spark, scaled, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
@@ -477,7 +493,7 @@ object ScaleProbe {
     // footer min/max prunes nothing and the bloom sidecars are the
     // only thing standing between the lookup and a full-table scan
     locally {
-      val dir = Files.createTempDirectory("graft-scale-bloom")
+      val dir = tempDir("graft-scale-bloom")
         .resolve("t").toString
       Tables.t(spark, scaled, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
@@ -516,8 +532,8 @@ object ScaleProbe {
     // difference between KB and ~100 MB of metadata per commit.
     locally {
       import graft.sources.v2.GraftManifest
-      val t = new org.apache.hadoop.fs.Path(Files
-        .createTempDirectory("graft-scale-manifest").toString, "t")
+      val t = new org.apache.hadoop.fs.Path(tempDir(
+        "graft-scale-manifest").toString, "t")
       val fs = t.getFileSystem(spark.sessionState.newHadoopConf())
       fs.mkdirs(t)
       val wide = (1 to 50000).map(i => f"part-$i%06d.parquet")
@@ -629,7 +645,7 @@ object ScaleProbe {
     locally {
       val docsT = Tables.t(spark, base, "documents")
       val bench = docsT.filter(col("doc_id") % 5 === 0)
-      val idx = Files.createTempDirectory("graft-decon-idx").toString
+      val idx = tempDir("graft-decon-idx").toString
       def adhocOnce(): Double = {
         val t0 = System.nanoTime()
         operators.CorpusOps.decontaminate(docsT, bench, n = 3,
@@ -656,7 +672,6 @@ object ScaleProbe {
 
     println(f"""{"metric":"scale_probe_worst_ratio","factor":$factor,""" +
       f""""value":$worst%.2f}""")
-    spark.stop()
   }
 
   /** Write an ~Nx copy of the probe tables; remaining tables copied 1x

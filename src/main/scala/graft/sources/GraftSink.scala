@@ -15,7 +15,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.v2.GraftHadoopConf
 
 /** Write path: SaveMode matrix + two all-or-nothing commit protocols.
   *
@@ -271,18 +272,8 @@ object GraftSink {
     if (!checkMode(fs, target, mode)) return
     if (mode == SaveMode.Overwrite && fs.exists(target)) fs.delete(target, true)
     fs.mkdirs(target)
-    // Spark's own parquet WriteSupport reads its settings from the Hadoop
-    // conf; schema + the session-independent knobs are pinned here so the
-    // executor-side writer needs no SparkSession.
-    ParquetWriteSupport.setSchema(df.schema, hadoopConf)
-    hadoopConf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    hadoopConf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    hadoopConf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    // Spark 4.1's schema converter reads this with a bare .toBoolean; the
-    // session-conf copy can surface it as the literal string "null".
-    hadoopConf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      "false")
-    val serConf = new SerializableConfiguration(hadoopConf)
+    val shipped = GraftHadoopConf.broadcast(
+      GraftHadoopConf.pinParquetWrite(hadoopConf, df.schema))
     val jobId = UUID.randomUUID().toString.take(8)
     val dirStr = target.toString
     val pageRows = math.max(batchSize, 1)
@@ -291,7 +282,7 @@ object GraftSink {
     // txids). Rows never leave the executor.
     val tokens: Array[String] = df.queryExecution.toRdd.mapPartitions { rows =>
       val pid = TaskContext.getPartitionId()
-      val conf: Configuration = serConf.value
+      val conf: Configuration = shipped.value.value
       // Files this task has opened, newest last; rolled at
       // `maxRowsPerFile` so one skewed partition (e.g. a hot bucket in
       // a bucketed write) yields several bounded parquet files instead

@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
 /** FILE-LEVEL BLOOM INDEX for point-lookup pruning.
@@ -208,14 +207,14 @@ object BloomIndex {
           .groupBy(col("__f")).agg(bloomAgg)
         // write sidecars FROM THE EXECUTORS: only (#files) small
         // confirmation rows return to the driver
-        val conf = new SerializableConfiguration(
+        val shipped = GraftHadoopConf.broadcast(
           spark.sessionState.newHadoopConf())
         val dirStr = dir.toString
         val written = perFile.select(col("__f"), col("bloom"))
           .rdd.map { row =>
             val fname = new Path(row.getString(0)).getName
             val bytes = row.getAs[Array[Byte]](1)
-            val dfs = new Path(dirStr).getFileSystem(conf.value)
+            val dfs = new Path(dirStr).getFileSystem(shipped.value.value)
             val tmp = new Path(dirStr,
               s".$fname.bloom.tmp-${java.util.UUID.randomUUID()}")
             val out = dfs.create(tmp, true)
@@ -326,7 +325,7 @@ object BloomIndex {
       } else {
         // distributed prune: ship (file, sidecar paths) out, return
         // surviving names only — never the filters themselves
-        val conf = new SerializableConfiguration(
+        val shipped = GraftHadoopConf.broadcast(
           spark.sessionState.newHadoopConf())
         val probeList = probes.map { case (c, hs) =>
           (colDir(table, c).toString, hs.toArray)
@@ -336,7 +335,7 @@ object BloomIndex {
           .filter { fname =>
             probeList.forall { case (cdir, hashes) =>
               val p = new Path(cdir, s"$fname.bloom")
-              val dfs = p.getFileSystem(conf.value)
+              val dfs = p.getFileSystem(shipped.value.value)
               (Try {
                 if (!dfs.exists(p)) true
                 else {

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 /** CHANGE DATA FEED: the row-level changes each committed version
   * introduced, reconstructed from the version log — what an
@@ -413,7 +412,7 @@ object GraftCdf {
     }
     if (dvGrown.nonEmpty) {
       val dvDirStr = DeleteVectors.dvDir(table).toString
-      val sconf = new SerializableConfiguration(conf)
+      val shipped = GraftHadoopConf.broadcast(conf)
       import spark.implicits._
       // expand bitmap differences on EXECUTORS, one task per touched
       // file — the position set is the commit's deleted-row count and
@@ -421,9 +420,10 @@ object GraftCdf {
       val positions = spark.createDataset(dvGrown)
         .repartition(math.min(dvGrown.size, 64))
         .flatMap { case (name, curDv, prevDv) =>
-          val bm = DeleteVectors.load(s"$dvDirStr/$curDv", sconf.value)
+          val c = shipped.value.value
+          val bm = DeleteVectors.load(s"$dvDirStr/$curDv", c)
           if (prevDv.nonEmpty) {
-            bm.andNot(DeleteVectors.load(s"$dvDirStr/$prevDv", sconf.value))
+            bm.andNot(DeleteVectors.load(s"$dvDirStr/$prevDv", c))
           }
           val it = bm.getIntIterator
           val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]

@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
@@ -396,15 +397,15 @@ class GraftCdfMicroBatchStream(path: String, dataSchema: StructType,
     val feedSchema = GraftCdfStream.feedSchema(dataSchema)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     GraftCdfReaderFactory(dataSchema,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+      GraftHadoopConf.broadcast(spark.sessionState.newHadoopConf()),
       GraftVectorReaderFactory(
-        new SerializableConfiguration(vconfFor(dataSchema)),
+        GraftHadoopConf.broadcast(vconfFor(dataSchema)),
         dataSchema, -1, tz),
       // drained spills (COW fallback) carry the change metadata as
       // REAL columns — their columnar reads use the full feed schema
       // and need no constant wrapping
       GraftVectorReaderFactory(
-        new SerializableConfiguration(vconfFor(feedSchema)),
+        GraftHadoopConf.broadcast(vconfFor(feedSchema)),
         feedSchema, -1, tz))
   }
 
@@ -437,7 +438,7 @@ class GraftCdfMicroBatchStream(path: String, dataSchema: StructType,
   * tables — and an all-columnar batch columnar, so nested tables
   * keep batch decode. */
 case class GraftCdfReaderFactory(dataSchema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     vectorFactory: GraftVectorReaderFactory,
     drainVectorFactory: GraftVectorReaderFactory)
     extends PartitionReaderFactory {
@@ -452,7 +453,7 @@ case class GraftCdfReaderFactory(dataSchema: StructType,
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftCdfPartition]
-    new GraftCdfReader(p, dataSchema, conf.value)
+    new GraftCdfReader(p, dataSchema, conf.value.value)
   }
 
   override def createColumnarReader(partition: InputPartition)

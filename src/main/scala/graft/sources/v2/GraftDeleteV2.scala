@@ -14,10 +14,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{BucketLayout, InternalRowParquetBuilder, PredicateFiles}
 
@@ -299,7 +297,7 @@ object GraftDeleteV2 {
     val internal = PredicateFiles.internalizeTemporal(cond, schema)
     val maxFrac = DeleteVectors.maxFraction
     val dvDirStr = DeleteVectors.dvDir(target).toString
-    val sconf = new SerializableConfiguration(GraftHadoopConf.sessionConf())
+    val shipped = GraftHadoopConf.broadcast(GraftHadoopConf.sessionConf())
     val stagingStr = staging.toString
     val jobs = files.zipWithIndex.map { case (p, i) =>
       val suffix = BucketLayout.bucketIdOf(p.getName)
@@ -311,7 +309,7 @@ object GraftDeleteV2 {
     }
     spark.sparkContext.parallelize(jobs, jobs.size)
       .map { case (in, name, oldDvPath, outName, dvName) =>
-        val conf = sconf.value
+        val conf = shipped.value.value
         val attempt = Option(TaskContext.get())
           .map(_.attemptNumber()).getOrElse(0)
         val outNamed =
@@ -474,7 +472,7 @@ object GraftDeleteV2 {
     }
     val dvDirStr =
       if (target == null) null else DeleteVectors.dvDir(target).toString
-    val sconf = new SerializableConfiguration(GraftHadoopConf.sessionConf())
+    val shipped = GraftHadoopConf.broadcast(GraftHadoopConf.sessionConf())
     val stagingStr = staging.toString
     val jobs: Seq[(String, String, String)] = files.zipWithIndex.map {
       case (p, i) =>
@@ -493,10 +491,11 @@ object GraftDeleteV2 {
         val named =
           if (attempt == 0) outName
           else outName.replaceFirst("^part-del-", s"part-del-a$attempt-")
+        val conf = shipped.value.value
         val skip =
           if (oldDvPath == null) null
-          else DeleteVectors.load(oldDvPath, sconf.value)
-        rewriteOne(sconf.value, in, s"$stagingStr/$named", internal,
+          else DeleteVectors.load(oldDvPath, conf)
+        rewriteOne(conf, in, s"$stagingStr/$named", internal,
           skip = skip, renames = renames)
       }
       .collect().toSeq.flatten.map(new Path(_))
@@ -570,14 +569,12 @@ object GraftDeleteV2 {
     }
   }
 
-  private def openWriter(conf: Configuration, struct: StructType,
+  /** `shared` may be the broadcast value every task reads, and each
+    * file has its own schema, so the writer pins a copy. */
+  private def openWriter(shared: Configuration, struct: StructType,
       outFile: String): ParquetWriter[InternalRow] = {
-    ParquetWriteSupport.setSchema(struct, conf)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      "false")
+    val conf =
+      GraftHadoopConf.pinParquetWrite(new Configuration(shared), struct)
     new InternalRowParquetBuilder(
         HadoopOutputFile.fromPath(new Path(outFile), conf))
       .withConf(conf)

@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -149,8 +150,9 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
       (b.numBuckets, ords, ords.map(op.tableSchema.fields(_).dataType))
     }
     GraftDeltaWriterFactory(
-      new SerializableConfiguration(hconf()),
-      s"${op.path}/$stagingName", jobId, op.tableSchema, bucketing)
+      GraftHadoopConf.broadcast(
+        GraftHadoopConf.pinParquetWrite(hconf(), op.tableSchema)),
+      s"${op.path}/$stagingName", jobId, bucketing)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -240,11 +242,11 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
       val extraIncoming: Seq[Path] =
         if (escalate.isEmpty) Seq.empty
         else {
-          val sconf = new SerializableConfiguration(conf)
+          val shipped = GraftHadoopConf.broadcast(conf)
           SparkSession.active.sparkContext
             .parallelize(escalate.toSeq, escalate.size)
             .map { case (in, out, dvBytes) =>
-              GraftDeleteV2.materializeOne(sconf.value, in, out,
+              GraftDeleteV2.materializeOne(shipped.value.value, in, out,
                 DeleteVectors.deserialize(dvBytes), renames)
             }
             .collect().toSeq.flatten.map(new Path(_))
@@ -273,19 +275,22 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation)
 private[v2] case class GraftDeltaCommit(files: Seq[String],
     deletes: Map[String, Array[Byte]]) extends WriterCommitMessage
 
-case class GraftDeltaWriterFactory(conf: SerializableConfiguration,
-    stagingDir: String, jobId: String, schema: StructType,
+/** `conf` carries the table schema, pinned for the parquet writers
+  * ([[GraftHadoopConf.pinParquetWrite]]). */
+case class GraftDeltaWriterFactory(
+    conf: Broadcast[SerializableConfiguration], stagingDir: String,
+    jobId: String,
     bucketing: Option[(Int, Array[Int],
       Array[org.apache.spark.sql.types.DataType])] = None)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(conf.value, stagingDir, jobId, partitionId,
-      taskId, schema, bucketing)
+    new GraftDeltaWriter(conf.value.value, stagingDir, jobId, partitionId,
+      taskId, bucketing)
 }
 
 class GraftDeltaWriter(conf: Configuration, stagingDir: String,
-    jobId: String, partitionId: Int, taskId: Long, schema: StructType,
+    jobId: String, partitionId: Int, taskId: Long,
     bucketing: Option[(Int, Array[Int],
       Array[org.apache.spark.sql.types.DataType])] = None)
     extends DeltaWriter[InternalRow] {
@@ -293,7 +298,6 @@ class GraftDeltaWriter(conf: Configuration, stagingDir: String,
   import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
   import org.apache.parquet.hadoop.metadata.CompressionCodecName
   import org.apache.parquet.hadoop.util.HadoopOutputFile
-  import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 
   private val deletes = mutable.HashMap.empty[String, RoaringBitmap]
   // key: bucket id, or -1 for the single unbucketed writer. Bucketed
@@ -344,12 +348,6 @@ class GraftDeltaWriter(conf: Configuration, stagingDir: String,
       case None => -1
     }
     writers.getOrElseUpdate(bucket, {
-      ParquetWriteSupport.setSchema(schema, conf)
-      conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-      conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-      conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-        "false")
       val out = outFileFor(bucket)
       (out, new InternalRowParquetBuilder(
           HadoopOutputFile.fromPath(new Path(out), conf))

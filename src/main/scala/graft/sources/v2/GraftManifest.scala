@@ -886,13 +886,12 @@ object GraftManifest {
       }
     } catch { case _: Exception => () }
     if (copies.nonEmpty) {
-      val serConf =
-        new org.apache.spark.util.SerializableConfiguration(conf)
+      val shipped = GraftHadoopConf.broadcast(conf)
       val slices = math.min(copies.length,
         math.max(1, spark.sparkContext.defaultParallelism * 2))
       spark.sparkContext.parallelize(copies.toSeq, slices)
         .foreach { case (f, t) =>
-          val c = serConf.value
+          val c = shipped.value.value
           val fp = new Path(f)
           val tp = new Path(t)
           if (!org.apache.hadoop.fs.FileUtil.copy(

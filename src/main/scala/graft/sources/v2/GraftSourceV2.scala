@@ -15,13 +15,14 @@ import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetWriteSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -950,21 +951,16 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
 
   /** Footer-derived stats (row count + byte size) so Catalyst can make
     * broadcast decisions for graft-v2 tables — without this the scan
-    * reports unknown size and dim joins never broadcast. Served from the
-    * footer cache: the footers are opened once per file per driver (in
-    * parallel), not once per query per planning step. */
+    * reports unknown size and dim joins never broadcast. They count
+    * the row groups the scan schedules ([[plannedRowGroups]]), so a
+    * selective range lookup reports its share, not the table — unless
+    * ANALYZE column stats ride along: those describe every row of the
+    * listed files, and CBO applies the pushed filters to them again,
+    * so the count stays the unpruned one the filter estimate expects.
+    * Served from the footer cache: the footers are opened once per
+    * file per driver (in parallel), not once per query per planning
+    * step. */
   override def estimateStatistics(): Statistics = {
-    var rows = 0L; var bytes = 0L
-    scanRowGroups.foreach { rg =>
-      rows += rg.rowCount; bytes += rg.totalByteSize
-    }
-    if (dvs.nonEmpty) {
-      // position deletes: subtract the deleted rows (sidecars are tiny
-      // and cached), keep bytes conservative
-      rows = math.max(0L, rows - DeleteVectors.cardinality(
-        new Path(path), dvs.values, GraftHadoopConf.sessionConf()))
-    }
-    val (fr, fb) = (rows, bytes)
     // ANALYZE-computed per-column NDV/null counts ([[GraftStats]]):
     // reported for the projected columns so
     // DataSourceV2Relation.transformV2Stats feeds them to CBO.
@@ -989,7 +985,7 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
             .get("spark.graft.stats.maxDrift", "1.0").toDouble)
             .getOrElse(1.0)
           maxDrift <= 0 ||
-            math.abs(fr - ts.rows).toDouble /
+            math.abs(listedRows - ts.rows).toDouble /
               math.max(ts.rows, 1L) <= maxDrift
         }
         .foreach { ts =>
@@ -1057,6 +1053,8 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
       }
       m
     }
+    val counted = if (colStats.isEmpty) plannedRowGroups() else scanRowGroups
+    val (fr, fb) = (liveRows(counted), counted.map(_.totalByteSize).sum)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(fb)
@@ -1086,16 +1084,12 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
       (if (vectorized) ", Vectorized: true" else "")
   }
 
-  /** One partition per surviving row group. Pushed filters prune row
-    * groups on the DRIVER from cached footer min/max statistics — the
-    * parquet analog of the DB evaluating the pushed WHERE before
-    * shipping rows: a 100 TB scan with a selective range predicate
-    * schedules only the groups whose stats admit a match. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    if (pushedAgg.isDefined) {
-      // footer-only answer: one synthetic partition, no file I/O
-      return Array(GraftInputPartition("", -1, 0L, 0L))
-    }
+  /** The row groups the scan schedules: [[scanRowGroups]] (the
+    * planning-time file prunes) narrowed by runtime `_file` sets, the
+    * runtime bloom / partition-token / skip-stat probes, footer
+    * min/max stats and bucket pruning. Partitions and statistics both
+    * come from here. */
+  private def plannedRowGroups(): Seq[FooterCache.RowGroupMeta] = {
     val groups = runtimeFileSet match {
       // runtime `_file` filters arrive after footers are cached —
       // they prune row groups, not the footer walk (name match, same
@@ -1159,13 +1153,41 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
       case _ => bucketKept
     }
     // runtime (DPP) filters probe the manifest skip stats too
-    val skipKept =
-      if (runtimeFilters.isEmpty || skipStats.isEmpty) pvKept
-      else pvKept.filter { rg =>
-        skipStats.get(new Path(rg.file).getName).forall(st =>
-          runtimeFilters.forall(SkipStats.mayMatch(_, st)))
-      }
-    val parts = skipKept.map(mkPartition)
+    if (runtimeFilters.isEmpty || skipStats.isEmpty) pvKept
+    else pvKept.filter { rg =>
+      skipStats.get(new Path(rg.file).getName).forall(st =>
+        runtimeFilters.forall(SkipStats.mayMatch(_, st)))
+    }
+  }
+
+  /** Rows of the files the listing-level prunes keep (bloom, partition
+    * tokens, manifest skip stats), before footer row-group pruning. */
+  private[v2] def listedRows: Long = liveRows(scanRowGroups)
+
+  /** Footer rows of `groups` minus the deletion-vector positions of
+    * their files (sidecars are tiny and cached). */
+  private def liveRows(groups: Seq[FooterCache.RowGroupMeta]): Long = {
+    val rows = groups.map(_.rowCount).sum
+    if (dvs.isEmpty) rows
+    else {
+      val files = groups.map(rg => new Path(rg.file).getName).toSet
+      math.max(0L, rows - DeleteVectors.cardinality(new Path(path),
+        dvs.collect { case (f, d) if files.contains(f) => d },
+        GraftHadoopConf.sessionConf()))
+    }
+  }
+
+  /** One partition per surviving row group. Pushed filters prune row
+    * groups on the DRIVER from cached footer min/max statistics — the
+    * parquet analog of the DB evaluating the pushed WHERE before
+    * shipping rows: a 100 TB scan with a selective range predicate
+    * schedules only the groups whose stats admit a match. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    if (pushedAgg.isDefined) {
+      // footer-only answer: one synthetic partition, no file I/O
+      return Array(GraftInputPartition("", -1, 0L, 0L))
+    }
+    val parts = plannedRowGroups().map(mkPartition)
     bucketGrouping match {
       case Some(b) =>
         // one partition per bucket, ALL buckets present (empty ones
@@ -1480,7 +1502,7 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
       // row-mode fallback: per-row merge over the parquet-mr readers
       val row = GraftReaderFactory(projectedSchema, filters, -1,
         Array.empty, -1,
-        new SerializableConfiguration(GraftHadoopConf.sessionConf()))
+        GraftHadoopConf.broadcast(GraftHadoopConf.sessionConf()))
       val base = if (appendFile) FileAppendReaderFactory(row) else row
       return BucketMergeReaderFactory(base, ords, dts)
     }
@@ -1508,7 +1530,7 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
         if (appendPos) (Array.empty[(String, Boolean, Boolean)], -1)
         else (topN, topNLimit)
       GraftReaderFactory(projectedSchema, filters, limit, tn, tnLim,
-        new SerializableConfiguration(GraftHadoopConf.sessionConf()),
+        GraftHadoopConf.broadcast(GraftHadoopConf.sessionConf()),
         appendPos)
     } else {
       // driver-side: snapshot the session's parquet read configuration
@@ -1532,10 +1554,10 @@ case class GraftScanV2(path: String, projectedSchema: StructType,
         // `_pos` + pushed top-k don't mix (heap rows lose their
         // ordinal) — same drop as row mode; Spark's retained global
         // sort+limit keeps results correct
-        GraftVectorTopNReaderFactory(new SerializableConfiguration(conf),
+        GraftVectorTopNReaderFactory(GraftHadoopConf.broadcast(conf),
           projectedSchema, tz, batchSize, topN, topNLimit)
       } else {
-        GraftVectorReaderFactory(new SerializableConfiguration(conf),
+        GraftVectorReaderFactory(GraftHadoopConf.broadcast(conf),
           projectedSchema, limit, tz, batchSize, appendPos)
       }
     }
@@ -1980,17 +2002,15 @@ private[v2] class KWayBatchMergeReader(
 
 case class GraftReaderFactory(readSchema: StructType,
     filters: Array[Filter], limit: Int,
-    topN: Array[(String, Boolean, Boolean)] = Array.empty,
-    topNLimit: Int = -1,
-    conf: SerializableConfiguration =
-      new SerializableConfiguration(new Configuration()),
+    topN: Array[(String, Boolean, Boolean)], topNLimit: Int,
+    conf: Broadcast[SerializableConfiguration],
     appendPos: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     new GraftRowGroupReader(p, readSchema, filters, limit, topN, topNLimit,
-      conf.value, appendPos)
+      conf.value.value, appendPos)
   }
 }
 
@@ -2675,7 +2695,8 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   * the codegen'd ColumnarToRow). This is the same executor read path as
   * Spark's own parquet source — decoding is column-at-a-time into
   * `OnHeapColumnVector`s, ~10× the row-materializing parquet-mr path. */
-case class GraftVectorReaderFactory(conf: SerializableConfiguration,
+case class GraftVectorReaderFactory(
+    conf: Broadcast[SerializableConfiguration],
     readSchema: StructType, limit: Int, sessionTz: String,
     batchSize: Int = 4096, appendPos: Boolean = false)
     extends PartitionReaderFactory {
@@ -2691,7 +2712,7 @@ case class GraftVectorReaderFactory(conf: SerializableConfiguration,
       : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     new GraftVectorReader(p,
-      GraftVectorReaderFactory.confFor(conf.value, readSchema, p),
+      GraftVectorReaderFactory.confFor(conf.value.value, readSchema, p),
       limit, sessionTz, batchSize, appendPos)
   }
 }
@@ -2906,7 +2927,8 @@ private[v2] object TopNOrdering {
   * group is no longer a columnar-friendly volume. A `LIMIT k` over an
   * ordered 100 TB table ships k rows per row group off the scan
   * instead of full batches into the global TakeOrdered. */
-case class GraftVectorTopNReaderFactory(conf: SerializableConfiguration,
+case class GraftVectorTopNReaderFactory(
+    conf: Broadcast[SerializableConfiguration],
     readSchema: StructType, sessionTz: String, batchSize: Int,
     topN: Array[(String, Boolean, Boolean)], topNLimit: Int)
     extends PartitionReaderFactory {
@@ -2915,7 +2937,7 @@ case class GraftVectorTopNReaderFactory(conf: SerializableConfiguration,
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     val inner = new GraftVectorReader(p,
-      GraftVectorReaderFactory.confFor(conf.value, readSchema, p),
+      GraftVectorReaderFactory.confFor(conf.value.value, readSchema, p),
       -1, sessionTz, batchSize)
     new PartitionReader[InternalRow] {
       private var iter: Iterator[InternalRow] = _
@@ -2965,7 +2987,7 @@ class GraftRowGroupReader(part: GraftInputPartition,
     readSchema: StructType, filters: Array[Filter], limit: Int,
     topN: Array[(String, Boolean, Boolean)] = Array.empty,
     topNLimit: Int = -1,
-    conf: Configuration = new Configuration(),
+    conf: Configuration,
     appendPos: Boolean = false)
     extends PartitionReader[InternalRow] {
 
@@ -3135,17 +3157,48 @@ class GraftRowGroupReader(part: GraftInputPartition,
   override def close(): Unit = reader.close()
 }
 
-/** Driver-side Hadoop configuration source: the active session's conf
-  * (which carries `spark.hadoop.*` filesystem settings — S3
-  * credentials, endpoints) when a session exists, else a bare conf.
-  * Every driver-side listing/footer read goes through here so it sees
-  * the same filesystem view as `createReaderFactory`'s executor-bound
-  * snapshot. */
+/** The one owner of how graft code reaches a Hadoop configuration.
+  *
+  * The rule: driver code calls [[sessionConf]]; anything a task needs
+  * goes through [[broadcast]]. A session conf carries ~1,100 entries
+  * (~110 KB serialized). Captured in a factory or closure, it rides in
+  * every task binary and every task decodes it before it reads a row;
+  * broadcast, it is decoded once per executor, and not at all in local
+  * mode, where the driver's block manager already holds the value.
+  * Tasks of one executor share that value, so a task that must set a
+  * key copies the conf first (`new Configuration(conf)`). */
 object GraftHadoopConf {
+  /** The active session's conf (which carries `spark.hadoop.*`
+    * filesystem settings — S3 credentials, endpoints) when a session
+    * exists, else a bare conf, so every driver-side listing and footer
+    * read sees the same filesystem view as the tasks. */
   def sessionConf(): Configuration =
     SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  /** Ship `conf` to the tasks of the active session's context. The
+    * caller must not change `conf` afterwards: in local mode the tasks
+    * read this very object. */
+  def broadcast(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(conf))
+
+  /** Pin what Spark's parquet `WriteSupport` reads from `conf` — the
+    * row schema and the settings every graft write fixes — so a task's
+    * writer needs no session. Spark 4.1's schema converter reads the
+    * variant key with a bare `.toBoolean`, and a session-conf copy can
+    * surface it as the literal string "null". Returns `conf`. */
+  def pinParquetWrite(conf: Configuration, schema: StructType)
+      : Configuration = {
+    ParquetWriteSupport.setSchema(schema, conf)
+    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
+    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
+      "false")
+    conf
+  }
 }
 
 /** Parquet footer/metadata helpers shared by driver and executors. */

@@ -7,10 +7,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -608,37 +608,29 @@ class GraftBatchWriteV2(path: String, schema: StructType,
       case GraftCommitMultiV2(fs0) => fs0
     }
 
-  protected def hconf(): Configuration = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    ParquetWriteSupport.setSchema(schema, conf)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      "false")
-    conf
-  }
+  protected def hconf(): Configuration =
+    GraftHadoopConf.pinParquetWrite(
+      SparkSession.active.sessionState.newHadoopConf(), schema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
     val conf = hconf()
     val staging = new Path(new Path(path), stagingName)
     staging.getFileSystem(conf).mkdirs(staging)
+    val shipped = GraftHadoopConf.broadcast(conf)
     val base = (bucketSpec, partitionSpec) match {
       case (Some(b), _) =>
         val ords = b.bucketCols.map(schema.fieldIndex).toArray
         val dts = ords.map(schema.fields(_).dataType)
-        GraftBucketedWriterFactoryV2(new SerializableConfiguration(conf),
+        GraftBucketedWriterFactoryV2(shipped,
           staging.toString, jobId, b.numBuckets, ords, dts)
       case (None, Some(pl)) =>
         val ords = pl.cols.map(schema.fieldIndex).toArray
         val dts = ords.map(schema.fields(_).dataType)
-        GraftPartitionedWriterFactoryV2(
-          new SerializableConfiguration(conf),
+        GraftPartitionedWriterFactoryV2(shipped,
           staging.toString, jobId, pl, ords, dts)
       case (None, None) =>
-        GraftWriterFactoryV2(new SerializableConfiguration(conf),
-          staging.toString, jobId)
+        GraftWriterFactoryV2(shipped, staging.toString, jobId)
     }
     val gens = GraftGenGuard.compile(path, schema)
     if (gens.isEmpty) base
@@ -800,14 +792,15 @@ class GraftBatchWriteV2(path: String, schema: StructType,
   }
 }
 
-case class GraftBucketedWriterFactoryV2(conf: SerializableConfiguration,
-    stagingDir: String, jobId: String, numBuckets: Int,
+case class GraftBucketedWriterFactoryV2(
+    conf: Broadcast[SerializableConfiguration], stagingDir: String,
+    jobId: String, numBuckets: Int,
     bucketOrds: Array[Int],
     bucketTypes: Array[org.apache.spark.sql.types.DataType])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GraftBucketedDataWriterV2(conf.value, stagingDir, jobId,
+    new GraftBucketedDataWriterV2(conf.value.value, stagingDir, jobId,
       partitionId, taskId, numBuckets, bucketOrds, bucketTypes)
 }
 
@@ -863,15 +856,16 @@ class GraftBucketedDataWriterV2(conf: Configuration, stagingDir: String,
   override def close(): Unit = closeOnce()
 }
 
-case class GraftWriterFactoryV2(conf: SerializableConfiguration,
+case class GraftWriterFactoryV2(conf: Broadcast[SerializableConfiguration],
     stagingDir: String, jobId: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GraftDataWriterV2(conf.value, stagingDir, jobId, partitionId, taskId)
+    new GraftDataWriterV2(conf.value.value, stagingDir, jobId, partitionId,
+      taskId)
 }
 
 case class GraftPartitionedWriterFactoryV2(
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     stagingDir: String, jobId: String,
     layout: graft.sources.PartitionLayout,
     partOrds: Array[Int],
@@ -879,7 +873,7 @@ case class GraftPartitionedWriterFactoryV2(
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GraftPartitionedDataWriterV2(conf.value, stagingDir, jobId,
+    new GraftPartitionedDataWriterV2(conf.value.value, stagingDir, jobId,
       partitionId, taskId, layout, partOrds, partTypes)
 }
 
@@ -984,21 +978,14 @@ class GraftStreamingWriteV2(path: String, schema: StructType,
   private def key = s"stream.$app"
   private def prefix(epochId: Long) = f"stream-$app-$epochId%08d-"
 
-  private def hconf(): Configuration = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    ParquetWriteSupport.setSchema(schema, conf)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      "false")
-    conf
-  }
+  private def hconf(): Configuration =
+    GraftHadoopConf.pinParquetWrite(
+      SparkSession.active.sessionState.newHadoopConf(), schema)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
     GraftStreamingWriterFactoryV2(
-      new SerializableConfiguration(hconf()), path, app,
+      GraftHadoopConf.broadcast(hconf()), path, app,
       GraftCheckGuard.compile(path, schema),
       GraftGenGuard.compile(path, schema), schema)
 
@@ -1195,8 +1182,8 @@ private[v2] object GraftCheckGuard {
   * path, rooted in the epoch's staging directory; rows pass the
   * [[GraftCheckGuard]] predicates (compiled once per writer) before
   * they reach parquet. */
-case class GraftStreamingWriterFactoryV2(conf: SerializableConfiguration,
-    path: String, app: String,
+case class GraftStreamingWriterFactoryV2(
+    conf: Broadcast[SerializableConfiguration], path: String, app: String,
     checks: Seq[(String, String, org.apache.spark.sql.catalyst
       .expressions.Expression)] = Nil,
     gens: Seq[GraftGenGuard.Gen] = Nil,
@@ -1207,8 +1194,9 @@ case class GraftStreamingWriterFactoryV2(conf: SerializableConfiguration,
       epochId: Long): DataWriter[InternalRow] = {
     val staging = new Path(new Path(path),
       GraftStreamingWriteV2.stagingName(app, epochId))
-    staging.getFileSystem(conf.value).mkdirs(staging)
-    val inner = new GraftDataWriterV2(conf.value, staging.toString,
+    val hconf = conf.value.value
+    staging.getFileSystem(hconf).mkdirs(staging)
+    val inner = new GraftDataWriterV2(hconf, staging.toString,
       f"$app-$epochId%08d", partitionId, taskId)
     val checked =
       if (checks.isEmpty) inner

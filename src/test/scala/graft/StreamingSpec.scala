@@ -1528,16 +1528,8 @@ class StreamingSpec extends SparkTestBase {
         org.apache.spark.sql.types.LongType)))
     val w = new graft.sources.v2.GraftStreamingWriteV2(
       dir, schema, "replay-app")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      graft.sources.v2.GraftHadoopConf.sessionConf())
-    org.apache.spark.sql.execution.datasources.parquet
-      .ParquetWriteSupport.setSchema(schema, conf.value)
-    conf.value.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.value.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
-    conf.value.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    conf.value.set(
-      "spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
+    val hc = graft.sources.v2.GraftHadoopConf
+    val conf = hc.broadcast(hc.pinParquetWrite(hc.sessionConf(), schema))
     def writeEpoch(epoch: Long, values: Seq[Long])
         : Array[org.apache.spark.sql.connector.write
           .WriterCommitMessage] = {

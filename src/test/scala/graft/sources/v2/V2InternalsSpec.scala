@@ -2,14 +2,20 @@ package graft.sources.v2
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.SupportsReportStatistics
 import org.apache.spark.sql.connector.write.PhysicalWriteInfo
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.functions.col
 
 import graft.SparkTestBase
 
 /** White-box coverage of the V2 streaming file log and the
   * truncate-commit protocol — the recovery paths a black-box streaming
   * test cannot reach (crash orphans, zombie-writer divergence,
-  * mid-commit rename failure). */
+  * mid-commit rename failure) — and of what the scan and write
+  * planners hand to Spark (factory payloads, scan statistics). */
 class V2InternalsSpec extends SparkTestBase {
 
   private def newLogDir(): Path = new Path(
@@ -210,5 +216,73 @@ class V2InternalsSpec extends SparkTestBase {
     assert(names.count(_.startsWith("f-p-")) == n)
     assert(names.count(_.startsWith("f-c-")) == n)
     assert(names.distinct.length == names.length)
+  }
+
+  /** Eight single-file appends over disjoint `id` ranges of 1,000. */
+  private def rangeTable(): String = {
+    val dir = tempDir("graft-v2-ranges").resolve("t").toString
+    (0 until 8).foreach { i =>
+      spark.range(i * 1000L, (i + 1) * 1000L).selectExpr("id", "id % 97 AS v")
+        .coalesce(1).write.format("graft-v2").mode("append").save(dir)
+    }
+    dir
+  }
+
+  private def scanOf(df: DataFrame): BatchScanExec =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }.head
+
+  private val writeInfo = new PhysicalWriteInfo {
+    override def numPartitions(): Int = 1
+  }
+
+  test("reader and writer factories carry the Hadoop conf as a broadcast") {
+    val dir = rangeTable()
+    def load(vectorized: Boolean) = spark.read.format("graft-v2")
+      .option("path", dir).option("vectorized", vectorized.toString).load()
+    val readers = Seq(
+      load(vectorized = true) -> classOf[GraftVectorReaderFactory],
+      load(vectorized = true).orderBy(col("v").desc).limit(5) ->
+        classOf[GraftVectorTopNReaderFactory],
+      load(vectorized = false) -> classOf[GraftReaderFactory]
+    ).map { case (df, cls) =>
+      val f = scanOf(df).readerFactory
+      assert(cls.isInstance(f), s"expected ${cls.getSimpleName}, got $f")
+      f
+    }
+    val schema = spark.range(1).schema
+    val batch = new GraftBatchWriteV2(
+      tempDir("graft-v2-ship").resolve("b").toString, schema,
+      truncateFirst = false).createBatchWriterFactory(writeInfo)
+    assert(batch.isInstanceOf[GraftWriterFactoryV2], batch)
+    val stream = new GraftStreamingWriteV2(
+      tempDir("graft-v2-ship").resolve("s").toString, schema, "ship-app")
+      .createStreamingWriterFactory(writeInfo)
+    assert(stream.isInstanceOf[GraftStreamingWriterFactoryV2], stream)
+    // a session Hadoop conf serializes to ~110 KB; a factory that
+    // captured one would ship it inside every task
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    (readers :+ batch :+ stream).foreach { f =>
+      val bytes = ser.serialize(f).limit()
+      assert(bytes < 16 * 1024,
+        s"${f.getClass.getSimpleName} serializes to $bytes bytes")
+    }
+  }
+
+  test("scan statistics count the row groups the scan plans") {
+    val dir = rangeTable()
+    val df = spark.read.format("graft-v2").option("path", dir).load()
+      .filter(col("id") >= 1000 && col("id") < 2000)
+    val scan = scanOf(df)
+    val conf = spark.sessionState.newHadoopConf()
+    val plannedRows = scan.inputPartitions.map {
+      case p: GraftInputPartition =>
+        ParquetMeta.listRowGroupStats(p.file, conf)(p.rowGroup)._1
+    }.sum
+    val numRows = scan.scan.asInstanceOf[SupportsReportStatistics]
+      .estimateStatistics().numRows().getAsLong
+    assert(scan.inputPartitions.size < 8, scan.inputPartitions)
+    assert(numRows == plannedRows, s"numRows $numRows, planned $plannedRows")
+    assert(numRows >= 1000L && numRows < 8000L, numRows)
+    assert(df.count() == 1000L)
   }
 }
